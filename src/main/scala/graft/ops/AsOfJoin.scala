@@ -113,6 +113,10 @@ object AsOfJoin {
       }
     val bc = spark.sparkContext.broadcast((fRows, byEntity))
     val pFields = probes.schema.fields
+    // probe key ordinals resolved by name once, here: the probe frame may
+    // carry payload columns before `entity` and `t`
+    val pEntity = probes.schema.fieldIndex("entity")
+    val pT = probes.schema.fieldIndex("t")
     val fFields = f.schema.fields
     val nP = pFields.length
     val outSchema = StructType(pFields ++
@@ -129,10 +133,10 @@ object AsOfJoin {
       val joined = new JoinedRow
       val nullF: InternalRow = new GenericInternalRow(fFields.length)
       it.map { pr =>
-        val fr: InternalRow = idx.get(pr.get(0, eType)) match {
+        val fr: InternalRow = idx.get(pr.get(pEntity, eType)) match {
           case None => nullF
           case Some((ts, order)) =>
-            val t = pr.getLong(1)
+            val t = pr.getLong(pT)
             // greatest index with ts(i) <= t
             var lo = 0; var hi = ts.length - 1; var ans = -1
             while (lo <= hi) {

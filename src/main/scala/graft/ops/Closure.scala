@@ -60,12 +60,44 @@ object Closure {
       if (cached != null) cached.unpersist(false)
       else base.unpersist(false) // round 1 materialized; base is done
       cached = next
-      cur = next.drop("__chg")
+      // the next round reads this cache through a leaf plan, not through
+      // this round's plan tree, so a plan's size stays constant per round
+      cur = org.apache.spark.sql.graftx.PlanCut(next.drop("__chg"))
       converged = changed == 0
       round += 1
     }
     if (round == 0) base.unpersist(false) // maxRounds == 0 caller
     val finalCache = cached
     (cur, () => if (finalCache != null) { finalCache.unpersist(false); () })
+  }
+
+  /** [[resolveRoots]] on the driver, for a forest small enough to hold as
+    * one array over dense ids `0 until n`: `parent(i)` is node i's parent,
+    * `i` itself marks a root, and a parent outside `[0, n)` is dangling
+    * and becomes the root, as the distributed left join leaves it. The
+    * same synchronous pointer doubling with the same round limit, so the
+    * result equals resolveRoots' on the same edges, cycles and unfinished
+    * chains included. Returns `root(i)` per node.
+    */
+  private[graft] def resolveRootsDense(parent: Array[Long], maxRounds: Int = 10): Array[Long] = {
+    val n = parent.length
+    var cur = parent.clone()
+    var next = new Array[Long](n)
+    var round = 0
+    var changed = true
+    while (round < maxRounds && changed) {
+      changed = false
+      var i = 0
+      while (i < n) {
+        val r = cur(i)
+        val rr = if (r >= 0 && r < n) cur(r.toInt) else r
+        next(i) = rr
+        if (rr != r) changed = true
+        i += 1
+      }
+      val t = cur; cur = next; next = t
+      round += 1
+    }
+    cur
   }
 }

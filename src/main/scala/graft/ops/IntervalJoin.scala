@@ -75,7 +75,7 @@ object IntervalJoin {
     * both sides blow the stats ceiling and the join stays binned.
     */
   private val BroadcastMaxPlanBytes = BigInt(256L * 1024 * 1024)
-  private val BroadcastMaxRows = 1000000L
+  private[graft] val BroadcastMaxRows = 1000000L
 
   private def planBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes

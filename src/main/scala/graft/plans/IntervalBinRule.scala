@@ -43,9 +43,14 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     * Correctness is width-independent (the emit-once proof holds for any
     * positive width); only the work shape changes.
     */
-  def BinSize: Long =
-    try conf.getConfString("spark.graft.intervalBin.size", "8192").toLong
-    catch { case _: NumberFormatException => 8192L }
+  def BinSize: Long = {
+    val size =
+      try conf.getConfString("spark.graft.intervalBin.size", "8192").toLong
+      catch { case _: NumberFormatException => 8192L }
+    // the emit-once proof above needs a positive width; 0 divides by zero
+    require(size > 0, s"spark.graft.intervalBin.size must be positive, got $size")
+    size
+  }
 
   private def toLong(e: Expression): Expression =
     if (e.dataType == LongType) e else Cast(e, LongType)

@@ -53,6 +53,18 @@ class AsOfJoinSpec extends SparkSpec {
       "small side should broadcast, not window")
   }
 
+  test("broadcast path finds entity and t by name when the probe frame starts with event_id") {
+    val p = probesLocal.map { case (e, t, pid) => (pid, e, t) }.toDF("event_id", "entity", "t")
+    def byEvent(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("event_id"), col("f_t"), col("v")).collect().map { r =>
+        r.getLong(0) -> (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
+      }.toMap
+    val want = byEvent(AsOfJoin.windowed(p, feats))
+    assert(want.values.count(_.nonEmpty) > 300)
+    assert(byEvent(AsOfJoin.broadcastPath(p, feats)) == want)
+    assert(byEvent(AsOfJoin.join(p, feats)) == want)
+  }
+
   test("equal timestamps are visible (t'=t counts, zero leakage beyond)") {
     val f = Seq(("e", 100L, 1L), ("e", 200L, 2L)).toDF("entity", "t", "v")
     val p = Seq(("e", 99L, 1L), ("e", 100L, 2L), ("e", 199L, 3L), ("e", 200L, 4L))

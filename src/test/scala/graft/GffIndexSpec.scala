@@ -1,11 +1,18 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.index.{GffOps, IndexBuild}
 import graft.ops.{Contained, Overlap}
 import graft.sources.GffSource
+import org.apache.spark.graftaccess.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.duration._
 
 /** End-to-end index-build + extract/search/intersect over a synthetic GFF
   * fixture, porting the reference's semantics as properties (SURVEY.md §5.3):
@@ -156,5 +163,118 @@ class GffIndexSpec extends SparkSpec {
       .select("id").as[String].collect().toSet
     assert(matchOnly == Set("gene1", "rna1", "ex1"),
       "per-line re-check drops non-overlapping group members (intersect.rs:301-307)")
+  }
+
+  /** The call sites of the jobs started while `body` runs, and how many
+    * jobs ended, with the listener bus drained. */
+  private def jobsOf[T](body: => T): (T, Seq[String], Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val ended = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(e.stageInfos.maxBy(_.stageId).name)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    ListenerBusAccess.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = try body finally ListenerBusAccess.waitUntilEmpty(sc)
+      (r, started.toArray(Array.empty[String]).toSeq, ended.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+
+  test("write/load round trip: same tables, manifest rows and schemas, load starts no job") {
+    val out = Files.createTempDirectory("gffidx").toString
+    IndexBuild.write(idx, out)
+    assert(idx.features.storageLevel == StorageLevel.NONE,
+      "write releases the features cache it made itself")
+    val (loaded, loadJobs, _) = jobsOf(IndexBuild.load(spark, out))
+    assert(loadJobs.isEmpty, s"load reads the manifest's schemas instead of inferring them: $loadJobs")
+    val manifest = new ObjectMapper().readTree(Files.readAllBytes(Paths.get(s"$out/manifest.json")))
+    for (((name, built), (_, back)) <- idx.named.zip(loaded.named)) {
+      assert(back.columns.toSeq == built.columns.toSeq, s"$name column order")
+      assert(back.schema.map(_.dataType) == built.schema.map(_.dataType), s"$name column types")
+      assert(back.schema == spark.read.parquet(s"$out/$name").schema,
+        s"$name: the manifest schema is the one parquet inference gives")
+      assert(rows(back) == rows(built), s"$name rows")
+      assert(manifest.get(name).get("rows").asLong == built.count(), s"$name manifest rows")
+    }
+  }
+
+  test("write keeps a caller's features cache") {
+    val cached = idx.copy(features = idx.features.cache())
+    try {
+      cached.features.count()
+      IndexBuild.write(cached, Files.createTempDirectory("gffidx").toString)
+      assert(cached.features.storageLevel != StorageLevel.NONE)
+    } finally cached.features.unpersist(true)
+  }
+
+  test("job budget of parse -> build -> write -> load") {
+    // a lost saving (per-round closure jobs, per-table recompute and
+    // read-back counts, schema inference at load) shows up here first
+    val out = Files.createTempDirectory("gffidx").toString
+    val (p, parseJobs, _) = jobsOf(GffSource.parse(spark, s"$dir/test.gff"))
+    val (t, buildJobs, _) = jobsOf(IndexBuild.build(p))
+    val (_, writeJobs, _) = jobsOf(IndexBuild.write(t, out))
+    t.releaseScratch()
+    val (_, loadJobs, _) = jobsOf(IndexBuild.load(spark, out))
+    info(s"jobs: parse ${parseJobs.length}, build ${buildJobs.length}, " +
+      s"write ${writeJobs.length}, load ${loadJobs.length}")
+    assert(parseJobs.length <= 1, s"parse: $parseJobs")
+    assert(buildJobs.length <= 8, s"build: $buildJobs")
+    assert(writeJobs.length <= 20, s"write: $writeJobs")
+    assert(loadJobs.isEmpty, s"load: $loadJobs")
+  }
+
+  test("over-cap build (distributed closure) gives the same tables as the driver closure") {
+    val overCap = IndexBuild.build(parsed, driverClosureMaxRows = 0L)
+    try {
+      assert(!overCap.features.queryExecution.analyzed.toString.contains("UDF"),
+        "over the cap, roots come from the distributed rounds")
+      assert(idx.features.queryExecution.analyzed.toString.contains("UDF"),
+        "under the cap, roots come from the driver's array")
+      for (((name, a), (_, b)) <- overCap.named.zip(idx.named))
+        assert(rows(a) == rows(b), s"$name differs between the closure paths")
+    } finally overCap.releaseScratch()
+  }
+
+  test("write: the first failure cancels the other writes and commits no manifest") {
+    val out = Files.createTempDirectory("gffidx").toString
+    val boom = udf((x: Long) => {
+      if (x >= 0) throw new IllegalStateException("injected sidecar failure")
+      x
+    })
+    val slow = udf((x: Long) => { Thread.sleep(1000); x })
+    val t = idx.copy(
+      entityDict = idx.entityDict.withColumn("entity_id", boom(col("entity_id"))),
+      groupExtents = spark.range(0, 200, 1, 1).select(slow(col("id")).as("n")))
+    val t0 = System.nanoTime()
+    val (err, started, ended) = jobsOf(intercept[Exception](IndexBuild.write(t, out)))
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(causes(err).exists(c => String.valueOf(c.getMessage).contains("injected sidecar failure")),
+      s"the first error is rethrown: $err")
+    assert(s < 60, s"the slow write (~200 s) was cancelled, took $s s")
+    assert(started.length == ended, s"no job of the write is left running: $started, $ended ended")
+    assert(!Files.exists(Paths.get(s"$out/manifest.json")))
+  }
+
+  test("write: a write past its bound is cancelled") {
+    val out = Files.createTempDirectory("gffidx").toString
+    val slow = udf((x: Long) => { Thread.sleep(1000); x })
+    val t = idx.copy(intervals = spark.range(0, 400, 1, 4).select(slow(col("id")).as("n")))
+    val t0 = System.nanoTime()
+    val (err, started, ended) =
+      jobsOf(intercept[java.util.concurrent.TimeoutException](IndexBuild.write(t, out, 5.seconds)))
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(s < 60, s"write returned ${s}s after a 5 s bound: $err")
+    assert(started.length == ended, s"no job of the write is left running: $started, $ended ended")
+    assert(!Files.exists(Paths.get(s"$out/manifest.json")))
   }
 }

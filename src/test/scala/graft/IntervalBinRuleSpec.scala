@@ -292,4 +292,30 @@ class IntervalBinRuleSpec extends SparkSpec {
         spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
     }
   }
+
+  test("a bin size <= 0 fails loudly, naming the setting") {
+    val (a, b) = fixture()
+    a.createOrReplaceTempView("probes_z")
+    b.createOrReplaceTempView("feats_z")
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ IntervalBinRule
+    try {
+      spark.conf.set("spark.graft.intervalBin.force", "1")
+      for (size <- Seq("0", "-256")) {
+        spark.conf.set("spark.graft.intervalBin.size", size)
+        val e = intercept[Exception](spark.sql(
+          """SELECT p.probe_id, f.fid FROM probes_z p JOIN feats_z f
+            |  ON p.entity = f.entity AND p.start < f.end AND p.end > f.start""".stripMargin)
+          .collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage).contains("spark.graft.intervalBin.size")),
+          s"size $size: $e")
+      }
+    } finally {
+      spark.conf.unset("spark.graft.intervalBin.size")
+      spark.conf.set("spark.graft.intervalBin.force", "0")
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
+    }
+  }
 }

@@ -3,6 +3,7 @@ package graft.index
 import graft.index.IndexBuild.IndexTables
 import graft.ops.{IntervalJoin, OverlapMode}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** The reference's query commands re-expressed over the persisted index
@@ -27,10 +28,9 @@ object GffOps {
     */
   def extract(t: IndexTables, names: DataFrame, types: Seq[String] = Nil): DataFrame = {
     val nm = names.select(trim(col(names.columns.head)).as("id"))
-      .where(length(col("id")) > 0).distinct()
+      .where(length(col("id")) > 0)
     val roots = t.features.join(broadcast(nm), Seq("id"), "left_semi")
-      .select(col("root_fid")).distinct()
-    val rows = t.features.join(broadcast(roots), "root_fid")
+    val rows = groupsOf(t, roots, broadcastRoots = true)
     val filtered = if (types.nonEmpty) rows.where(col("ftype").isin(types: _*)) else rows
     filtered.orderBy(col("line_no"))
   }
@@ -63,10 +63,20 @@ object GffOps {
 
   private def searchByAids(t: IndexTables, aids: DataFrame, types: Seq[String]): DataFrame = {
     val roots = t.features.join(broadcast(aids.select("aid")), Seq("aid"), "left_semi")
-      .select("root_fid").distinct()
-    val rows = t.features.join(broadcast(roots), "root_fid")
+    val rows = groupsOf(t, roots, broadcastRoots = true)
     val filtered = if (types.nonEmpty) rows.where(col("ftype").isin(types: _*)) else rows
     filtered.orderBy(col("line_no"))
+  }
+
+  /** Every row of the groups whose root appears in `roots`' `root_fid`,
+    * `root_fid` first (the column order of the inner join on `root_fid`
+    * this replaces). A semi join ignores duplicate keys on its build side,
+    * so `roots` needs no distinct — and no dedup job or shuffle. */
+  private def groupsOf(t: IndexTables, roots: DataFrame, broadcastRoots: Boolean): DataFrame = {
+    val f = t.features
+    val r = roots.select("root_fid")
+    f.join(if (broadcastRoots) broadcast(r) else r, Seq("root_fid"), "left_semi")
+      .select((col("root_fid") +: f.columns.filterNot(_ == "root_fid").map(col)): _*)
   }
 
   /** A1 — per-root bucketing of matched probes (intersect.rs:598-607,
@@ -102,9 +112,16 @@ object GffOps {
       types: Seq[String] = Nil): DataFrame = {
     val probes0 = regions.select(col("entity_id").as("entity"), col("start"), col("end"))
     // the match-only path references the probe side from BOTH interval
-    // joins, and each join's auto-path decision additionally counts it —
-    // up to four evaluations of whatever plan produced the regions
-    // (measured ~3 s/eval of q35's 6.5 s warm wall clock). Persist once.
+    // joins, and each join's auto-path decision may count it — up to four
+    // evaluations of a COMPUTED regions plan (measured ~3 s/eval of q35's
+    // 6.5 s warm wall clock). Persist such a plan once. A driver-local
+    // plan (a LocalRelation) is not persisted: evaluating it is free, its
+    // row bound lets both joins broadcast it without a count, and it
+    // collects without a job — persisting would turn it into an
+    // InMemoryRelation with no row bound, costing fill and collect jobs.
+    // The matches of a driver-local region list are broadcast into the
+    // group semi join (the few groups a handful of regions hit); a computed
+    // plan's matches are unbounded and left to AQE's join choice.
     // NOTE (ADVICE r4): Dataset.persist registers the plan in the session
     // CacheManager, which holds a strong reference until an explicit
     // unpersist/clearCache — the ContextCleaner only reclaims GC'd RDDs,
@@ -116,8 +133,9 @@ object GffOps {
     // would be wrong: it also evicts the SHARED index-table caches that
     // q32-q51 amortize one build across (measured: q51 4.9 s → 83 s in
     // the round-5 dress sweeps that cleared between queries).
+    val local = probes0.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
     val probes =
-      if (!invert && (matchOnly || types.nonEmpty)) {
+      if (!invert && (matchOnly || types.nonEmpty) && !local) {
         val p = probes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val prev = lastProbePlan.put(probes0.sparkSession, p)
         if (prev != null && (prev ne p))
@@ -138,15 +156,13 @@ object GffOps {
       // overlap candidates, kept iff the mode predicate FAILS (invert ^ keep)
       val keep = IntervalJoin.join(probes, ivs, graft.ops.Overlap)
         .where(!IntervalJoin.predicate(mode))
-        .select(col("root_fid")).distinct()
-      t.features.join(keep, "root_fid").orderBy(col("line_no"))
+      groupsOf(t, keep, broadcastRoots = local).orderBy(col("line_no"))
     } else {
       val hits = IntervalJoin.join(probes, ivs, mode)
-      val roots = hits.select(col("root_fid")).distinct()
       // type filter applied BEFORE the re-check join and its fid-dedup
       // shuffle (ftype is functionally dependent on fid, so filtering
       // commutes with the dedup; it cut q35's re-check pair volume ~30x)
-      val rows0 = t.features.join(roots, "root_fid")
+      val rows0 = groupsOf(t, hits, broadcastRoots = local)
       val rows = if (types.nonEmpty) rows0.where(col("ftype").isin(types: _*)) else rows0
       val out0 = if (matchOnly || types.nonEmpty) {
         // re-check each line with the SELECTED mode (intersect.rs:500-517,

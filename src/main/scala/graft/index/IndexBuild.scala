@@ -1,7 +1,7 @@
 package graft.index
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.ops.{Closure, IntervalJoin}
+import graft.ops.{BroadcastSide, Closure}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -36,7 +36,7 @@ import scala.util.Try
   * amortized over every query after (index-once/query-many, README.md:383).
   *
   * Stage 4 resolves names to fids with a distributed join either way. An
-  * index of at most [[IntervalJoin.BroadcastMaxRows]] features (counted
+  * index of at most [[BroadcastSide.MaxRows]] features (counted
   * by stage 1's zip) then collects its edges in one job, runs the pointer
   * doubling on the driver over a `long[]` indexed by fid
   * ([[Closure.resolveRootsDense]]) and attaches `root_fid` from a
@@ -65,7 +65,7 @@ object IndexBuild {
   }
 
   /** Build all index tables from a parsed GFF DataFrame (GffSource.parse). */
-  def build(parsed: DataFrame): IndexTables = build(parsed, IntervalJoin.BroadcastMaxRows)
+  def build(parsed: DataFrame): IndexTables = build(parsed, BroadcastSide.MaxRows)
 
   /** [[build]] with the largest index whose closure runs on the driver. */
   private[graft] def build(parsed: DataFrame, driverClosureMaxRows: Long): IndexTables = {

@@ -51,29 +51,21 @@ object AsOfJoin {
         fVal.map(n => col("__last").getField(n).as(n))): _*)
   }
 
-  /** Hard row cap enforced (by an exact count job) before the broadcast
-    * path collects anything — nothing unbounded ever reaches the driver
-    * (same discipline as IntervalJoin.broadcastImpl).
-    */
-  private val BroadcastMaxRows = 1000000L
-  private val BroadcastMaxPlanBytes = BigInt(256L * 1024 * 1024)
-
-  /** Auto path (same decision shape as IntervalJoin.join): broadcast the
-    * feature side iff it is PROVABLY small — plan-statistics prefilter,
-    * then one exact count of the candidate — else the windowed merge. At
-    * 100 TB the feature side blows the stats ceiling and the join stays
-    * windowed (one shuffle, zero driver traffic).
+  /** Auto path (same decision as IntervalJoin.join): broadcast the feature
+    * side iff it is PROVABLY small — plan-statistics prefilter, then
+    * [[BroadcastSide.withinCap]] (the plan's row bound, else one bounded
+    * count) — else the windowed merge. At 100 TB the feature side blows the
+    * stats ceiling and the join stays windowed (one shuffle, zero driver
+    * traffic).
     */
   def join(probes: DataFrame, feats: DataFrame, tiebreak: Option[String] = None): DataFrame = {
-    val statsSmall =
-      feats.queryExecution.optimizedPlan.stats.sizeInBytes <= BroadcastMaxPlanBytes
     // the broadcast path has no tiebreak semantics knob; only take it when
     // the default (latest by time, any-dup) semantics were requested.
-    // The exact count is computed ONCE and threaded into the guarded impl
+    // The cap is proven ONCE and not re-checked by the guarded impl
     // (ADVICE r2: the public broadcastPath's require re-ran the count job,
     // a redundant full scan of the feature side per auto join).
-    if (statsSmall && tiebreak.isEmpty &&
-        feats.limit((BroadcastMaxRows + 1).toInt).count() <= BroadcastMaxRows)
+    if (tiebreak.isEmpty && BroadcastSide.planBytes(feats) <= BroadcastSide.MaxPlanBytes &&
+        BroadcastSide.withinCap(feats))
       broadcastChecked(probes, feats)
     else windowed(probes, feats, tiebreak)
   }
@@ -84,8 +76,8 @@ object AsOfJoin {
     * broadcast cap — use [[windowed]] for two big sides.
     */
   def broadcastPath(probes: DataFrame, feats: DataFrame): DataFrame = {
-    require(feats.count() <= BroadcastMaxRows,
-      s"as-of feature side exceeds $BroadcastMaxRows rows; use AsOfJoin.windowed")
+    require(feats.count() <= BroadcastSide.MaxRows,
+      s"as-of feature side exceeds ${BroadcastSide.MaxRows} rows; use AsOfJoin.windowed")
     broadcastChecked(probes, feats)
   }
 
@@ -105,7 +97,7 @@ object AsOfJoin {
     val fVal = feats.columns.filterNot(Set("entity", "t"))
     val f = feats.select((Seq(col("entity"), col("t")) ++ fVal.map(col)): _*)
     val eType = f.schema.fields(0).dataType
-    val fRows: Array[InternalRow] = f.queryExecution.toRdd.map(_.copy()).collect()
+    val fRows: Array[InternalRow] = BroadcastSide.collect(f)
     val byEntity: Map[Any, (Array[Long], Array[Int])] =
       fRows.indices.groupBy(i => fRows(i).get(0, eType)).map { case (e, idxs) =>
         val sorted = idxs.sortBy(i => (fRows(i).getLong(1), i.toLong)).toArray

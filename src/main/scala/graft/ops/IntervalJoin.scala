@@ -69,46 +69,30 @@ object IntervalJoin {
         payload.map(col)): _*)
   }
 
-  /** Plan-stats ceiling for considering a side broadcastable, and the hard
-    * row cap actually enforced (by an exact count job) before any
-    * driver-side collect. NOTHING unbounded is ever collected: at 100 TB
-    * both sides blow the stats ceiling and the join stays binned.
-    */
-  private val BroadcastMaxPlanBytes = BigInt(256L * 1024 * 1024)
-  private[graft] val BroadcastMaxRows = 1000000L
-
-  private def planBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-
   /** Auto path: broadcast the PROVABLY small side — plan-statistics
-    * prefilter, then an exact count of the candidate side(s) (one cheap
-    * aggregate job each) — else binned. The decision is eager (runs the
-    * count jobs at plan-construction time), like the reference's
-    * index-vs-scan choice at query open (intersect.rs:104-133).
+    * prefilter, then [[BroadcastSide.withinCap]] on the candidate side(s):
+    * the plan's row bound decides a driver-local side without a job, and
+    * only a side with no bound (a parquet scan) pays one cheap count — else
+    * binned. Like the reference's index-vs-scan choice at query open
+    * (intersect.rs:104-133), the decision is taken while the plan is built.
     */
   def join(probes: DataFrame, feats: DataFrame, mode: OverlapMode = Overlap,
       binSize: Long = 8192L): DataFrame = {
-    val pBytes = planBytes(probes)
-    val fBytes = planBytes(feats)
-    val pSmall = pBytes <= BroadcastMaxPlanBytes
-    val fSmall = fBytes <= BroadcastMaxPlanBytes
+    val pBytes = BroadcastSide.planBytes(probes)
+    val fBytes = BroadcastSide.planBytes(feats)
+    val pSmall = pBytes <= BroadcastSide.MaxPlanBytes
+    val fSmall = fBytes <= BroadcastSide.MaxPlanBytes
     if (!pSmall && !fSmall) binnedJoin(probes, feats, mode, binSize)
     else {
       // Build-side choice by plan-stats BYTES (what a broadcast actually
-      // costs), cap-checked by ONE bounded count job on the chosen side.
-      // r6 (guide §1.2): the old path ran an exact count() job on EVERY
-      // stats-small side — for the q35 re-check join that re-executed the
-      // matched-rows join once per decision, ~1-3 s of pure decision
-      // overhead per query. limit(cap+1) bounds the probe: a side whose
-      // stats lied big stops scanning after cap+1 rows instead of
-      // completing a full count.
+      // costs); the cheaper side is proven first and the other only if it
+      // fails. Proving every stats-small side re-ran q35's matched-rows
+      // join once per decision, ~1-3 s of pure decision overhead per query.
       val candidates = Seq((pSmall, false, pBytes), (fSmall, true, fBytes))
         .collect { case (true, buildIsFeature, bytes) => (buildIsFeature, bytes) }
         .sortBy(_._2)
       val chosen = candidates.iterator.map { case (buildIsFeature, _) =>
-        val side = if (buildIsFeature) feats else probes
-        val capped = side.limit((BroadcastMaxRows + 1).toInt).count()
-        (buildIsFeature, capped <= BroadcastMaxRows)
+        (buildIsFeature, BroadcastSide.withinCap(if (buildIsFeature) feats else probes))
       }.collectFirst { case (buildIsFeature, true) => buildIsFeature }
       chosen match {
         case Some(buildIsFeature) =>
@@ -149,8 +133,8 @@ object IntervalJoin {
     * or [[binnedJoin]] for two big sides.
     */
   def broadcastJoin(probes: DataFrame, feats: DataFrame, mode: OverlapMode): DataFrame = {
-    require(feats.count() <= BroadcastMaxRows,
-      s"broadcast side exceeds $BroadcastMaxRows rows; use binnedJoin/join(auto)")
+    require(feats.count() <= BroadcastSide.MaxRows,
+      s"broadcast side exceeds ${BroadcastSide.MaxRows} rows; use binnedJoin/join(auto)")
     broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature = true)
   }
 
@@ -159,8 +143,8 @@ object IntervalJoin {
     * handful of regions against a huge corpus — zero shuffle of the corpus).
     */
   def broadcastJoinProbeSide(probes: DataFrame, feats: DataFrame, mode: OverlapMode): DataFrame = {
-    require(probes.count() <= BroadcastMaxRows,
-      s"broadcast side exceeds $BroadcastMaxRows rows; use binnedJoin/join(auto)")
+    require(probes.count() <= BroadcastSide.MaxRows,
+      s"broadcast side exceeds ${BroadcastSide.MaxRows} rows; use binnedJoin/join(auto)")
     broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature = false)
   }
 
@@ -171,7 +155,8 @@ object IntervalJoin {
     * work). The old body collected external Rows and streamed the big
     * side through an Encoders.row mapPartitions — every streamed row paid
     * deserialize-to-GenericRow + re-encode just to probe a broadcast map.
-    * Now the build side collects UnsafeRows, the stream side maps
+    * Now the build side collects UnsafeRows (a driver-local build side
+    * without a job, [[BroadcastSide.collect]]), the stream side maps
     * `queryExecution.toRdd`, and each output row is one UnsafeProjection
     * over a JoinedRow — no external Row exists anywhere on the path.
     */
@@ -183,9 +168,7 @@ object IntervalJoin {
     val stream = if (buildIsFeature) p else f
     val spark = stream.sparkSession
     val eType = build.schema.fields(0).dataType
-    // toRdd rows may be buffer-reused per partition: copy before collect
-    val bRows: Array[InternalRow] =
-      build.queryExecution.toRdd.map(_.copy()).collect()
+    val bRows: Array[InternalRow] = BroadcastSide.collect(build)
     val byEntity: Map[Any, IntervalIndex] =
       bRows.indices.groupBy(i => bRows(i).get(0, eType)).map { case (e, idxs) =>
         e -> IntervalIndex.build(idxs.map(i => (bRows(i).getLong(1), bRows(i).getLong(2), i)).toArray)

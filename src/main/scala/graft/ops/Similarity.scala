@@ -162,7 +162,7 @@ object Similarity {
       .withColumn("bkt", expr(s"shiftright(__sb, CAST(g * $bandBits AS INT)) & ${w}L"))
       .withColumn("__bn", count(lit(1)).over(Window.partitionBy(col("g"), col("bkt"))))
       .withColumn("__kept", sum(when(col("__bn") <= maxBucket,
-        expr("CAST(shiftleft(1, CAST(g AS INT)) AS BIGINT)")).otherwise(0L)).over(wDb))
+        expr("shiftleft(1L, CAST(g AS INT))")).otherwise(0L)).over(wDb))
       .where(col("__bn") <= maxBucket)
       .select(col("db"), col("__sb"), col("__kept"), col("g"), col("bkt"))
     val pairs = a.join(b, Seq("g", "bkt"))

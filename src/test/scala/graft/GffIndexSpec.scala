@@ -4,14 +4,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.index.{GffOps, IndexBuild}
 import graft.ops.{Contained, Overlap}
 import graft.sources.GffSource
-import org.apache.spark.graftaccess.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.duration._
 
 /** End-to-end index-build + extract/search/intersect over a synthetic GFF
@@ -165,25 +162,6 @@ class GffIndexSpec extends SparkSpec {
       "per-line re-check drops non-overlapping group members (intersect.rs:301-307)")
   }
 
-  /** The call sites of the jobs started while `body` runs, and how many
-    * jobs ended, with the listener bus drained. */
-  private def jobsOf[T](body: => T): (T, Seq[String], Int) = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val ended = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(e.stageInfos.maxBy(_.stageId).name)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
-    }
-    ListenerBusAccess.waitUntilEmpty(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = try body finally ListenerBusAccess.waitUntilEmpty(sc)
-      (r, started.toArray(Array.empty[String]).toSeq, ended.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   private def causes(e: Throwable): Iterator[Throwable] =
@@ -205,6 +183,60 @@ class GffIndexSpec extends SparkSpec {
       assert(rows(back) == rows(built), s"$name rows")
       assert(manifest.get(name).get("rows").asLong == built.count(), s"$name manifest rows")
     }
+  }
+
+  /** The fixture index written and loaded back, as queries see it. */
+  private lazy val loadedIdx = {
+    val out = Files.createTempDirectory("gffidx").toString
+    IndexBuild.write(idx, out)
+    IndexBuild.load(spark, out)
+  }
+
+  test("query job budgets and output shape (extract, searchExact, intersect)") {
+    // a lost saving (a path decision or a dedup that runs a job, a
+    // persisted driver-local probe plan) or a reordered schema shows up here
+    val t = loadedIdx
+    val names = Seq("ex2", "gene3").toDF("name")
+    val overlap = Seq((0L, 150L, 350L)).toDF("entity_id", "start", "end")
+    val contained = Seq((0L, 50L, 600L), (1L, 0L, 40L)).toDF("entity_id", "start", "end")
+    val cases = Seq[(String, () => DataFrame, Int, Int, Set[String])](
+      ("extract", () => GffOps.extract(t, names), 0, 5,
+        Set("gene1", "rna1", "ex1", "ex2", "gene3")),
+      ("searchExact", () => GffOps.searchExact(t, Seq("alpha")), 0, 5,
+        Set("gene1", "rna1", "ex1", "ex2", "gene3")),
+      ("intersect", () => GffOps.intersect(t, overlap, Overlap), 0, 4,
+        Set("gene1", "rna1", "ex1", "ex2")),
+      ("intersect typed", () => GffOps.intersect(t, contained, Contained, matchOnly = true,
+        types = Seq("exon")), 1, 5, Set("ex1", "ex2")))
+    val cols = "root_fid" +: t.features.columns.toSeq.filterNot(_ == "root_fid")
+    val types = t.features.schema.map(f => f.name -> f.dataType).toMap
+    for ((name, query, buildBudget, collectBudget, ids) <- cases) {
+      val (df, built, _) = jobsOf(query())
+      val (rows, collected, _) = jobsOf(df.collect())
+      info(s"$name: ${built.length} jobs building, ${collected.length} collecting")
+      assert(built.length <= buildBudget, s"$name build: $built")
+      assert(collected.length <= collectBudget, s"$name collect: $collected")
+      assert(df.columns.toSeq == cols, s"$name column order")
+      assert(df.schema.forall(f => types(f.name) == f.dataType), s"$name column types")
+      val lineNos = rows.map(_.getAs[Long]("line_no")).toSeq
+      assert(lineNos == lineNos.sorted, s"$name: line_no ascending")
+      assert(rows.map(_.getAs[String]("id")).toSet == ids, s"$name rows")
+    }
+  }
+
+  test("intersect persists a computed probe plan, not a driver-local one") {
+    val t = loadedIdx
+    def probePlan(regions: DataFrame): DataFrame =
+      regions.select(col("entity_id").as("entity"), col("start"), col("end"))
+    val local = Seq((0L, 150L, 250L)).toDF("entity_id", "start", "end")
+    val computed = spark.range(1).select(lit(0L).as("entity_id"), lit(150L).as("start"),
+      lit(250L).as("end"))
+    val fromLocal = GffOps.intersect(t, local, Overlap, matchOnly = true)
+    assert(probePlan(local).storageLevel == StorageLevel.NONE)
+    val fromComputed = GffOps.intersect(t, computed, Overlap, matchOnly = true)
+    assert(probePlan(computed).storageLevel != StorageLevel.NONE)
+    assert(fromComputed.collect().toSeq == fromLocal.collect().toSeq)
+    assert(fromLocal.select("id").as[String].collect().toSet == Set("gene1", "rna1", "ex1"))
   }
 
   test("write keeps a caller's features cache") {

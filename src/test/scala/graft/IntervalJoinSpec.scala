@@ -2,6 +2,7 @@ package graft
 
 import graft.ops._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.functions._
 
 /** Brute-force O(n·m) oracle vs all three physical paths, all three overlap
@@ -56,6 +57,35 @@ class IntervalJoinSpec extends SparkSpec {
     test(s"sweep path == brute force [$m]") {
       assert(pairs(IntervalJoin.sweepJoin(probes, feats, mode)) == bruteForce(mode))
     }
+  }
+
+  /** Whether `df` is the binned path's plan (it explodes bins). */
+  private def binned(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Generate])
+
+  for (mode <- Seq(Overlap, Contained, ContainsRegion)) {
+    test(s"auto join: a driver-local side decides and collects without a job [$mode]") {
+      val (df, jobs, _) = jobsOf(IntervalJoin.join(probes, feats, mode))
+      assert(jobs.isEmpty, s"the row bound decides: $jobs")
+      assert(!binned(df))
+      assert(pairs(df) == bruteForce(mode))
+    }
+  }
+
+  test("auto join: sides bounded above the cap are counted and stay binned") {
+    // Range's row bound (1.1M) exceeds the cap, so it proves nothing
+    def side(off: Long, id: String) = spark.range(0, 1100000).select(lit("a").as("entity"),
+      (col("id") * 4 + off).as("start"), (col("id") * 4 + off + 2).as("end"), col("id").as(id))
+    val p = side(0, "probe_id")
+    val f = side(1, "fid")
+    val (auto, jobs, _) = jobsOf(IntervalJoin.join(p, f, Overlap))
+    assert(jobs.nonEmpty, "the sides are counted")
+    assert(binned(auto))
+    def digest(df: DataFrame) =
+      df.agg(count(lit(1)), sum(col("probe_id") * 7 + col("fid"))).collect().toSeq
+    val expected = digest(IntervalJoin.binnedJoin(p, f, Overlap))
+    assert(digest(auto) == expected)
+    assert(expected.head.getLong(0) == 1100000L, "probe i overlaps feature i only")
   }
 
   test("binned path emits each pair exactly once (no dedup needed)") {

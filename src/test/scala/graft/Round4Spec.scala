@@ -36,6 +36,28 @@ class Round4Spec extends SparkSpec {
       s"every band bucket of the hot clique holds 40 > 16 vectors -> no pairs; got $capped")
   }
 
+  test("near-dup pairs: a pair kept only in band 32 or later is found") {
+    // bandBits = 1: band g is one sign test; band 32 tests e(32) > e(35)
+    // (0-based). Vectors 0 and 1 share that bucket alone; three fillers
+    // differ only there, so every band below 32 holds all five vectors,
+    // over maxBucket = 2. The only kept band of vectors 0 and 1 is 32.
+    def vec(swap: Boolean) = Array.tabulate(64) { j =>
+      j match {
+        case 4  => -10f // band 5 tests e(35) > e(4): 1 for all five
+        case 55 => 10f // band 17 tests e(55) > e(32): 1 for all five
+        case 32 => if (swap) 0f else 1f
+        case 35 => if (swap) 1f else 0f
+        case _  => (j % 5).toFloat
+      }
+    }
+    val corpus = ((0L, vec(false)) +: (1L, vec(false)) +: (2L to 4L).map(i => (i, vec(true))))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.cosineNearDupPairs(corpus, "vec_id", "embedding", 0.9,
+      bandBits = 1, nBands = 33, maxBucket = 2)
+      .select("da", "db").as[(Long, Long)].collect().toSet
+    assert(got == Set((0L, 1L)))
+  }
+
   test("bucket audit flags exactly the over-populated buckets (no silent truncation)") {
     val audit = Similarity.bucketAudit(flooded, "vec_id", "embedding", maxBucket = 16)
       .select("g", "bkt", "n_vec", "dropped")

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.graftaccess.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.atomic.AtomicInteger
 
 /** One shared local SparkSession for the whole test JVM. */
 object TestSpark {
@@ -16,4 +20,23 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** The call sites of the jobs started while `body` runs, and how many
+    * jobs ended, with the listener bus drained. */
+  protected def jobsOf[T](body: => T): (T, Seq[String], Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val ended = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(e.stageInfos.maxBy(_.stageId).name)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    ListenerBusAccess.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = try body finally ListenerBusAccess.waitUntilEmpty(sc)
+      (r, started.toArray(Array.empty[String]).toSeq, ended.get)
+    } finally sc.removeSparkListener(l)
+  }
 }

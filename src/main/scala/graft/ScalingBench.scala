@@ -128,25 +128,6 @@ object ScalingBench {
       .collect()(0).getLong(0)
   }
 
-  /** The same feature stack + as-of through the one-pass FusedStack
-    * operator (q38's physical path): one exchange + one sort + a streaming
-    * mapPartitions instead of two WindowExec buffer passes — the engine's
-    * escalation path past the WindowExec memory-copy ceiling.
-    */
-  def fusedJob(spark: SparkSession, n: Long): Long = {
-    val ev = Synth.events(spark, n, nEntities = 4096)
-    val feat = graft.ops.FusedStack.stack(ev, lagCol = "value", lagOffsets = Seq(1, 2),
-      backfillCol = "value", rollCol = "event_time", rollN = 8, gap = 1000L,
-      tiebreak = "event_id")
-    val dim = Synth.events(spark, n / 16, nEntities = 4096, seed = 99L)
-      .groupBy(col("entity"), col("event_time").as("t"))
-      .agg(max("value").as("dim_v"))
-    val probes = feat.withColumnRenamed("event_time", "t")
-    val out = AsOfJoin.windowed(probes, dim)
-    out.agg(count(lit(1)), sum(pmod(xxhash64(out.columns.map(col): _*), lit(1000000007L))))
-      .collect()(0).getLong(0)
-  }
-
   /** Compute-bound: token/text feature extraction over generated docs. */
   def tokenJob(spark: SparkSession, n: Long): Long = {
     val docs = Synth.tokenSeqs(spark, n)
@@ -741,7 +722,8 @@ object ScalingBench {
   }
 
   /** Standalone main: run one or both probes and print `SCALING {json}`
-    * lines. `SPARK_GRAFT_SCALE_JOB` = window | tokens | all. Bench spawns
+    * lines. `SPARK_GRAFT_SCALE_JOB` = all | window | tokens | skew (`all`
+    * runs window and tokens; skew runs only when named). Bench spawns
     * this in a FRESH JVM per job so the 160-s query sweep's heap/GC state
     * can't contaminate the measurement (the round-1 failure mode).
     */
@@ -754,6 +736,8 @@ object ScalingBench {
     val nSkew = sys.env.getOrElse("SPARK_GRAFT_SCALE_SKEW_ROWS", "4000000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "5").toInt
     val which = sys.env.getOrElse("SPARK_GRAFT_SCALE_JOB", "all")
+    require(Set("all", "window", "tokens", "skew")(which),
+      s"SPARK_GRAFT_SCALE_JOB must be all | window | tokens | skew, got '$which'")
     // per-run host ceiling calibration in THIS fresh JVM (pure threads, no
     // Spark): what the hardware itself scales at for the job's bound
     // resource, shipped inside the JSON next to the measured efficiency.
@@ -891,9 +875,6 @@ object ScalingBench {
     if (which == "all" || which == "window")
       emitSafe("window_features_asof")(
         gated(windowJob, "window_features_asof", nWin, "copy"))
-    if (which == "fused")
-      emitSafe("fused_stack_asof")(
-        gated(fusedJob, "fused_stack_asof", nWin, "copy"))
     if (which == "all" || which == "tokens")
       emitSafe("tokenize_fingerprint_quality")(
         gated(tokenJob, "tokenize_fingerprint_quality", nTok, "compute"))

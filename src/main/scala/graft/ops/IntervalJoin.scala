@@ -138,16 +138,6 @@ object IntervalJoin {
     broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature = true)
   }
 
-  /** Path 1 swapped — broadcast the PROBE side, stream the feature side
-    * (the reference's small-query-list shape, intersect.rs:172-230: a
-    * handful of regions against a huge corpus — zero shuffle of the corpus).
-    */
-  def broadcastJoinProbeSide(probes: DataFrame, feats: DataFrame, mode: OverlapMode): DataFrame = {
-    require(probes.count() <= BroadcastSide.MaxRows,
-      s"broadcast side exceeds ${BroadcastSide.MaxRows} rows; use binnedJoin/join(auto)")
-    broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature = false)
-  }
-
   /** Broadcast body — the build side's row cap was ALREADY verified by the
     * caller (public entry points re-check; [[join]] reuses its own count).
     *

@@ -273,7 +273,7 @@ object Similarity {
     * Routing is APPROXIMATE in general (the global argmax centroid may
     * live under a different super) — the standard coarse-quantizer trade,
     * compensated at search time by nProbe — and EXACT in the two anchor
-    * cases Round5Spec pins: nSuper == 1 (one super owns every child) and
+    * cases SimilaritySpec pins: nSuper == 1 (one super owns every child) and
     * nSuper == nCells (every centroid is its own super).
     */
   def ivfAssign(corpus: DataFrame, idCol: String, embCol: String,

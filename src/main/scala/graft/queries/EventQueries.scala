@@ -164,13 +164,14 @@ object EventQueries {
        | s2.value_lag1, s2.cents_rsum5, s2.v_ff, s2.session_id, f.price_c AS price_c
        |FROM s2 ASOF LEFT JOIN f ON s2.entity = f.entity AND s2.t >= f.t""".stripMargin
 
-  // q38 — the one-pass fused feature stack (custom mapPartitions operator,
-  // zero WindowExec buffering) against the same windowed-SQL oracle: proof
-  // the physical-path OPTION computes identical values.
+  // q38 — the oracle row for WindowFeatures.stack on its own: every column
+  // it appends (lag AND lead, backfill, all four rolling aggregates, the
+  // session id), ordered with the event_id tiebreak, backfilling a column
+  // with nulls punched in every 7th event.
   val q38: Q = (s, d) => {
     val e = Views.eventsV(s, d).withColumn("v",
       when(col("event_id") % 7 === 0, lit(null).cast("double")).otherwise(col("value")))
-    graft.ops.FusedStack.stack(e, lagCol = "value", lagOffsets = Seq(1),
+    WindowFeatures.stack(e, lagCol = "value", lagOffsets = Seq(1),
       backfillCol = "v", rollCol = "cents", rollN = 5, gap = SessionGapMicros,
       entity = "user_id", time = "t", tiebreak = "event_id")
       .select("event_id", "value_lag1", "value_lead1", "v_ff",

@@ -107,12 +107,6 @@ object GffSource {
   private def nullIfEmpty(c: org.apache.spark.sql.Column) =
     when(length(c) > 0, c)
 
-  /** Parse the attributes column wholesale to a map (alternative to the
-    * 3-column extraction; ≙ GFF3 `key=value;...`).
-    */
-  def attrsAsMap(df: DataFrame): DataFrame =
-    df.withColumn("attr_map", expr("str_to_map(attrs, ';', '=')"))
-
   /** S2 — BED region scan (reference: commands/intersect.rs:201-230):
     * whitespace-split (chrom, start, end), half-open coords as-is, other
     * columns ignored; malformed rows dropped (cast -> null -> filter).

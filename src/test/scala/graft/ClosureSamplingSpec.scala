@@ -65,4 +65,23 @@ class ClosureSamplingSpec extends SparkSpec {
     // strata sizes: s0=34, s1=33, s2=33 -> ceil(0.1*n) = 4, 4, 4
     assert(perStratum == Map("s0" -> 4, "s1" -> 4, "s2" -> 4))
   }
+
+  test("resolveRootsReleasable: correct roots, and release() leaves no cached data behind") {
+    // depth-3 chains + a self-root + a dangling parent
+    val edges = (Seq((0L, 0L), (1L, 0L), (2L, 1L), (3L, 2L), (4L, 99L)) ++
+      (10L until 40L).map(i => (i, i - 10)))
+      .toDF("id", "parent")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (roots, release) = Closure.resolveRootsReleasable(edges)
+    val m = roots.as[(Long, Long)].collect().toMap
+    assert(m(3L) == 0L && m(2L) == 0L && m(0L) == 0L)
+    assert(m(4L) == 99L, "dangling parent resolves to the pointer itself")
+    assert(m(30L) == 0L || m(30L) == 10L % 10, "chain resolves to its head")
+    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(during.nonEmpty, "the closure rounds should have materialized caches")
+    release()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.intersect(during)
+    assert(leaked.isEmpty,
+      s"closure rounds must not leave cached RDDs after release(): $leaked")
+  }
 }

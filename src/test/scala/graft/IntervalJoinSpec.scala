@@ -1,5 +1,6 @@
 package graft
 
+import graft.model.Synth
 import graft.ops._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Generate
@@ -117,5 +118,22 @@ class IntervalJoinSpec extends SparkSpec {
     val shuffled = probes.repartition(7, col("start"))
     assert(pairs(IntervalJoin.binnedJoin(shuffled, feats.repartition(5), Overlap, 64L)) ==
       bruteForce(Overlap))
+  }
+
+  test("skewed hot-entity input: binned and entity-hash sweep paths agree exactly") {
+    val probes = Synth.skewedProbes(spark, 20000, nEntities = 16)
+    val feats = Synth.featureIntervals(spark, 5000, nEntities = 16)
+      .drop("group_id", "ftype", "attr")
+    def rows(binSize: Long): Set[Seq[Any]] =
+      IntervalJoin.sweepJoin(probes, feats, Overlap, binSize)
+        .collect().map(_.toSeq).toSet
+    val binned = rows(4096L)
+    val entityHash = rows(1L << 40) // degenerate: one bin per entity
+    assert(binned == entityHash)
+    assert(binned.nonEmpty)
+    // the fixture really is skewed: >= 40% of probe rows on one entity
+    val hot = probes.groupBy("entity").count().orderBy(col("count").desc)
+      .limit(1).as[(String, Long)].collect()(0)
+    assert(hot._1 == "e00" && hot._2 >= 8000, s"hot entity: $hot")
   }
 }

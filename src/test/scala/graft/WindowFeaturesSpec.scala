@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.WindowFeatures
 import graft.model.Synth
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class WindowFeaturesSpec extends SparkSpec {
@@ -40,6 +41,50 @@ class WindowFeaturesSpec extends SparkSpec {
     assert(got == Seq(
       (None, None), (Some(1.0), Some(3.0)), (None, Some(4.0)),
       (Some(3.0), None), (Some(4.0), None)))
+  }
+
+  // --- stack's contract: the same columns and values as composing the
+  // single-feature operators, at any partitioning ---------------------------
+
+  private def byEventId(df: DataFrame): Map[Long, Seq[Any]] = {
+    val cols = df.columns.sorted
+    df.select(cols.map(col): _*).collect()
+      .map(r => r.getLong(cols.indexOf("event_id")) -> r.toSeq).toMap
+  }
+
+  private def composed(df: DataFrame, lagOffsets: Seq[Int], rollN: Int, gap: Long) = {
+    val tb = "event_id"
+    val lagged = WindowFeatures.lagLead(df, "value", lagOffsets, tiebreak = tb)
+    val filled = WindowFeatures.backfill(lagged, "value", tiebreak = tb)
+    val rolled = WindowFeatures.rolling(filled, "cents", rollN, tiebreak = tb)
+    WindowFeatures.sessionize(rolled, gap, tiebreak = tb)
+  }
+
+  test("stack == sessionize . rolling . backfill . lagLead (nulls, dup ts, entities, partitioning)") {
+    val ev = Synth.events(spark, 20000L, nEntities = 37)
+      .withColumn("cents",
+        when(col("value").isNotNull, round(col("value") * 100).cast("long")))
+    val expected = byEventId(composed(ev, Seq(1, 2), 5, gap = 40L))
+    def stacked(df: DataFrame) = byEventId(WindowFeatures.stack(df, "value", Seq(1, 2),
+      "value", "cents", 5, gap = 40L, tiebreak = "event_id"))
+    assert(expected.size == 20000)
+    assert(stacked(ev) == expected)
+    assert(stacked(ev.repartition(3)) == expected)
+  }
+
+  test("stack == composed operators: single-row entities, all-null value entity") {
+    val df = Seq(
+      ("a", 1L, 10L, Option.empty[Double], Option(5L)),
+      ("b", 2L, 10L, Option(1.5), Option.empty[Long]),
+      ("b", 3L, 11L, Option.empty[Double], Option(7L)),
+      ("b", 4L, 99L, Option(2.5), Option(9L))
+    ).toDF("entity", "event_id", "event_time", "value", "cents")
+    val stacked = WindowFeatures.stack(df, "value", Seq(1), "value", "cents", 2,
+      gap = 10L, tiebreak = "event_id")
+    assert(byEventId(stacked) == byEventId(composed(df, Seq(1), 2, gap = 10L)))
+    // session break: t jumps 11 -> 99 with gap 10 -> new session
+    val sess = stacked.where(col("event_id") === 4).select("session_id").collect()(0).getLong(0)
+    assert(sess == 1L)
   }
 
   test("synthetic token_seqs: n_tok == tokens.length, identical across parallelism (input_hint invariant)") {

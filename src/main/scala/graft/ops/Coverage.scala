@@ -17,25 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Coverage {
 
-  /** Collapse intervals into disjoint islands per `keys`.
-    * Input needs (`startCol`, `endCol`) + keys + `orderTiebreak` (unique
-    * within keys → deterministic at any parallelism).
-    * Output: keys + `island`, `s`, `e`.
-    */
-  def disjointUnion(df: DataFrame, keys: Seq[String], startCol: String = "start",
-      endCol: String = "end", orderTiebreak: Seq[String] = Nil): DataFrame = {
-    val ord = (Seq(startCol, endCol) ++ orderTiebreak).map(col)
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
-    val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
-    df.withColumn("__maxe", max(col(endCol)).over(wPrev))
-      .withColumn("__brk",
-        when(col("__maxe").isNull || col(startCol) > col("__maxe"), 1L).otherwise(0L))
-      .withColumn("island", sum(col("__brk")).over(wCum))
-      .groupBy((keys :+ "island").map(col): _*)
-      .agg(min(col(startCol)).as("s"), max(col(endCol)).as("e"))
-  }
-
   /** Total covered length + island count per `keys`.
     *
     * r6 (guide §2.4): computed WITHOUT materializing the islands — in
@@ -44,10 +25,10 @@ object Coverage {
     * ends; a fully-covered interval contributes 0, a partially-overlapped
     * one its uncovered suffix, an island-opener its full length), and the
     * island count is the sum of break flags. Identical values to summing
-    * `e - s` over [[disjointUnion]]'s islands (each island's length is
-    * exactly the telescoped sum of its members' contributions), one
-    * window + ONE aggregate instead of window + island-groupBy +
-    * aggregate — a full shuffle less per coverage query (q08/q09/q43).
+    * `e - s` over the merged islands (each island's length is exactly the
+    * telescoped sum of its members' contributions), one window + ONE
+    * aggregate instead of window + island-groupBy + aggregate — a full
+    * shuffle less per coverage query (q08/q09/q43).
     */
   def unionLength(df: DataFrame, keys: Seq[String], startCol: String = "start",
       endCol: String = "end", orderTiebreak: Seq[String] = Nil): DataFrame = {

@@ -1,7 +1,11 @@
 package graft.ops
 
+import graft.plans.IntervalBinRule
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable.ArrayBuffer
@@ -26,17 +30,20 @@ case object ContainsRegion extends OverlapMode
   * Output: `entity, p_start, p_end, <probe payload>, f_start, f_end,
   * <feature payload>`.
   *
+  * A null entity never matches, on every path (SQL equality).
+  *
   * Three physical paths (SURVEY.md §4 decision tree):
-  *  1. [[broadcastJoin]] — annotation side small: broadcast per-entity
-  *     [[IntervalIndex]] (≙ the reference's in-memory tree), probe-side
-  *     mapPartitions, zero shuffle of the big side.
+  *  1. broadcast ([[join]] with a provably small side): broadcast
+  *     per-entity [[IntervalIndex]] (≙ the reference's in-memory tree) of
+  *     that side, stream the other, zero shuffle of the big side.
   *  2. [[binnedJoin]] — both sides big and/or hot-entity skew: explode into
-  *     fixed-width coordinate bins and equi-join on (entity, bin); Catalyst
-  *     plans a plain shuffled hash/sort-merge equi-join with whole-stage
-  *     codegen; the "emit only in the intersection-start bin" trick makes
-  *     output exactly-once with NO dedup shuffle. This is also the skew
-  *     salting template (reference: src/commands/depth.rs:29-31,162-207 —
-  *     a hot entity's rows spread across all its bins).
+  *     fixed-width coordinate bins and equi-join on (entity, bin), built by
+  *     [[IntervalBinRule]]'s rewrite (the SQL front-end's plan); Catalyst
+  *     plans a sort-merge equi-join with whole-stage codegen; the "emit
+  *     only in the intersection-start bin" trick makes output exactly-once
+  *     with NO dedup shuffle. This is also the skew salting template
+  *     (reference: src/commands/depth.rs:29-31,162-207 — a hot entity's
+  *     rows spread across all its bins).
   *  3. [[sweepJoin]] — both sides big, entity cardinality >= parallelism:
   *     tag-union + repartition(entity) + sortWithinPartitions + single-pass
   *     plane sweep in typed mapPartitions, O(n+m+k) per partition
@@ -76,13 +83,12 @@ object IntervalJoin {
     * binned. Like the reference's index-vs-scan choice at query open
     * (intersect.rs:104-133), the decision is taken while the plan is built.
     */
-  def join(probes: DataFrame, feats: DataFrame, mode: OverlapMode = Overlap,
-      binSize: Long = 8192L): DataFrame = {
+  def join(probes: DataFrame, feats: DataFrame, mode: OverlapMode = Overlap): DataFrame = {
     val pBytes = BroadcastSide.planBytes(probes)
     val fBytes = BroadcastSide.planBytes(feats)
     val pSmall = pBytes <= BroadcastSide.MaxPlanBytes
     val fSmall = fBytes <= BroadcastSide.MaxPlanBytes
-    if (!pSmall && !fSmall) binnedJoin(probes, feats, mode, binSize)
+    if (!pSmall && !fSmall) binnedJoin(probes, feats, mode)
     else {
       // Build-side choice by plan-stats BYTES (what a broadcast actually
       // costs); the cheaper side is proven first and the other only if it
@@ -97,118 +103,62 @@ object IntervalJoin {
       chosen match {
         case Some(buildIsFeature) =>
           broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature)
-        case None => binnedJoin(probes, feats, mode, binSize)
+        case None => binnedJoin(probes, feats, mode)
       }
     }
   }
 
   /** Path 2 — binned/salted equi-join. Pure Catalyst; codegen end-to-end.
-    *
-    * The join is FORCED to a shuffle merge: binnedJoin is by contract the
+    * The plan is `prep(probes) JOIN prep(feats) ON entity AND predicate(mode)`
+    * rewritten by [[IntervalBinRule]] at width `binSize`: Overlap takes its
+    * overlap rewrite, Contained and ContainsRegion its containment rewrite.
+    * The rewrite forces a shuffle merge: binnedJoin is by contract the
     * both-sides-big path (small sides route through [[join]]'s broadcast
-    * decision), and a broadcast plan here would leave the expensive
-    * pair-predicate evaluation on the streamed side's SCAN partitions —
-    * which for a single-row-group parquet file is ONE task (measured 76 s
-    * for q36 at sf0.1; 64-way parallel after the exchange). At 100 TB a
-    * shuffle join on (entity, bin) is what the optimizer picks anyway;
-    * sort-merge (not shuffled-hash) keeps per-partition memory flat.
+    * decision).
     */
   def binnedJoin(probes: DataFrame, feats: DataFrame, mode: OverlapMode,
-      binSize: Long = 8192L): DataFrame = {
-    require(binSize > 0)
-    val p = prep(probes, "p").withColumn("__bin",
-      explode(sequence(expr(s"p_start DIV ${binSize}L"), expr(s"(p_end - 1) DIV ${binSize}L"))))
-    val f = prep(feats, "f").withColumn("__bin",
-      explode(sequence(expr(s"f_start DIV ${binSize}L"), expr(s"(f_end - 1) DIV ${binSize}L"))))
-    p.hint("shuffle_merge").join(f, Seq("entity", "__bin"))
-      .where(predicate(mode) &&
-        expr(s"greatest(p_start, f_start) DIV ${binSize}L") === col("__bin"))
-      .drop("__bin")
+      binSize: Long = IntervalBinRule.DefaultBinSize): DataFrame = {
+    val f = prep(feats, "f").withColumnRenamed("entity", "__f_entity")
+    val theta = prep(probes, "p").join(f, col("entity") === col("__f_entity") && predicate(mode))
+    val plan = theta.queryExecution.analyzed match {
+      case j: Join => IntervalBinRule.rewrite(j, binSize)
+    }
+    Bridge.dataFrame(theta.sparkSession, plan).drop("__f_entity")
   }
 
-  /** Path 1 — broadcast per-entity interval index of the FEATURE side +
-    * probe-side mapPartitions (like the reference's whole-index mmap,
-    * src/utils/tree_index.rs:21-34). Guarded: refuses to collect a side
-    * whose exact row count exceeds the broadcast cap — use [[join]] (auto)
-    * or [[binnedJoin]] for two big sides.
-    */
-  def broadcastJoin(probes: DataFrame, feats: DataFrame, mode: OverlapMode): DataFrame = {
-    require(feats.count() <= BroadcastSide.MaxRows,
-      s"broadcast side exceeds ${BroadcastSide.MaxRows} rows; use binnedJoin/join(auto)")
-    broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature = true)
-  }
-
-  /** Broadcast body — the build side's row cap was ALREADY verified by the
-    * caller (public entry points re-check; [[join]] reuses its own count).
-    *
-    * r6: runs at the InternalRow level end to end (guide §1.2 per-task
-    * work). The old body collected external Rows and streamed the big
-    * side through an Encoders.row mapPartitions — every streamed row paid
-    * deserialize-to-GenericRow + re-encode just to probe a broadcast map.
-    * Now the build side collects UnsafeRows (a driver-local build side
-    * without a job, [[BroadcastSide.collect]]), the stream side maps
-    * `queryExecution.toRdd`, and each output row is one UnsafeProjection
-    * over a JoinedRow — no external Row exists anywhere on the path.
+  /** Path 1 — broadcast the [[IntervalIndex]] per entity of the build side
+    * (like the reference's whole-index mmap, src/utils/tree_index.rs:21-34)
+    * and stream the other side through [[BroadcastSide.join]]; the build
+    * side's row cap was ALREADY proven by [[join]]. Output is always probe
+    * columns then feature payload; a null-entity row on either side pairs
+    * with nothing.
     */
   private def broadcastImpl(p: DataFrame, f: DataFrame, mode: OverlapMode,
       buildIsFeature: Boolean): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection}
-    val build = if (buildIsFeature) f else p
-    val stream = if (buildIsFeature) p else f
-    val spark = stream.sparkSession
-    val eType = build.schema.fields(0).dataType
-    val bRows: Array[InternalRow] = BroadcastSide.collect(build)
-    val byEntity: Map[Any, IntervalIndex] =
-      bRows.indices.groupBy(i => bRows(i).get(0, eType)).map { case (e, idxs) =>
-        e -> IntervalIndex.build(idxs.map(i => (bRows(i).getLong(1), bRows(i).getLong(2), i)).toArray)
-      }
-    val bc = spark.sparkContext.broadcast((bRows, byEntity))
-    // output layout is ALWAYS probe columns then feature payload
-    val outSchema = StructType(p.schema.fields ++ f.schema.fields.drop(1))
-    val sFields = stream.schema.fields
-    val bFields = build.schema.fields
-    val nS = sFields.length
-    // JoinedRow layout is (stream, build); project to probe-then-feature
-    val outRefs =
-      if (buildIsFeature) // stream = probes: stream cols ++ build cols drop entity
-        sFields.indices.map(i => BoundReference(i, sFields(i).dataType, sFields(i).nullable)) ++
-          (1 until bFields.length).map(j =>
-            BoundReference(nS + j, bFields(j).dataType, bFields(j).nullable))
-      else // stream = features: build (probe) cols ++ stream cols drop entity
-        bFields.indices.map(j => BoundReference(nS + j, bFields(j).dataType, bFields(j).nullable)) ++
-          (1 until sFields.length).map(i =>
-            BoundReference(i, sFields(i).dataType, sFields(i).nullable))
-    val outRdd = stream.queryExecution.toRdd.mapPartitions { it =>
-      val (rows, idx) = bc.value
-      val proj = UnsafeProjection.create(outRefs.toArray)
-      val joined = new JoinedRow
-      it.flatMap { sr =>
-        idx.get(sr.get(0, eType)) match {
-          case None => Iterator.empty[InternalRow]
-          case Some(ix) =>
-            val ss = sr.getLong(1); val se = sr.getLong(2)
-            // candidate superset from the index, exact-filtered by modeOk:
-            //  - streaming probes (build = features): a feature CONTAINING
-            //    the region must contain its start -> point probe;
-            //  - streaming features (build = probes): a probe containing the
-            //    feature must contain the feature's start -> point probe.
-            val cands = (mode, buildIsFeature) match {
-              case (ContainsRegion, true) => ix.queryPoint(ss)
-              case (Contained, false)     => ix.queryPoint(ss)
-              case _                      => ix.queryRange(ss, se)
-            }
-            cands.iterator
-              .filter { i =>
-                val br = rows(i)
-                if (buildIsFeature) modeOk(mode, ss, se, br.getLong(1), br.getLong(2))
-                else modeOk(mode, br.getLong(1), br.getLong(2), ss, se)
-              }
-              .map { i => proj(joined(sr, rows(i))): InternalRow }
-        }
-      }
+    val (stream, build) = if (buildIsFeature) (p, f) else (f, p)
+    // JoinedRow layout is (stream, build): where each side's columns start
+    val (pAt, fAt) = if (buildIsFeature) (0, p.schema.length) else (f.schema.length, 0)
+    val out = p.schema.fields.indices.map(i =>
+        BoundReference(pAt + i, p.schema(i).dataType, p.schema(i).nullable)) ++
+      (1 until f.schema.length).map(j =>
+        BoundReference(fAt + j, f.schema(j).dataType, f.schema(j).nullable))
+    // candidate superset from the index, exact-filtered by modeOk: a
+    // feature containing a streamed probe region, or a probe containing a
+    // streamed feature, contains the streamed row's start -> point probe
+    val point = (mode, buildIsFeature) match {
+      case (ContainsRegion, true) | (Contained, false) => true
+      case _ => false
     }
-    org.apache.spark.sql.graftx.InternalRows.create(spark, outRdd, outSchema)
+    BroadcastSide.join(stream, 0, build.where(col("entity").isNotNull), out,
+        StructType(p.schema.fields ++ f.schema.fields.drop(1)), nullOnMiss = false)(
+      (rows, is) => IntervalIndex.build(is.map(i => (rows(i).getLong(1), rows(i).getLong(2), i)).toArray)) {
+      (sr, ix, rows) =>
+        val ss = sr.getLong(1); val se = sr.getLong(2)
+        (if (point) ix.queryPoint(ss) else ix.queryRange(ss, se)).iterator.map(rows).filter { br =>
+          if (buildIsFeature) modeOk(mode, ss, se, br.getLong(1), br.getLong(2))
+          else modeOk(mode, br.getLong(1), br.getLong(2), ss, se)
+        }
+    }
   }
 
   /** Path 3 — range-binned plane sweep. Both sides explode into coordinate
@@ -227,8 +177,9 @@ object IntervalJoin {
     */
   def sweepJoin(probes: DataFrame, feats: DataFrame, mode: OverlapMode,
       binSize: Long = 0L): DataFrame = {
-    val p = prep(probes, "p")
-    val f = prep(feats, "f")
+    // a null entity matches nothing, but the sweep would group nulls together
+    val p = prep(probes, "p").where(col("entity").isNotNull)
+    val f = prep(feats, "f").where(col("entity").isNotNull)
     val width =
       if (binSize > 0) binSize
       else {
@@ -261,14 +212,14 @@ object IntervalJoin {
     val outSchema = StructType(p.schema.fields ++ f.schema.fields.drop(1))
     val m = mode
     val wBin = width
-    // r6: the sweep runs at the InternalRow level (like broadcastImpl) —
+    // r6: the sweep runs at the InternalRow level (like the broadcast loop) —
     // the old Encoders.row mapPartitions deserialized every union row to
     // an external Row (nested structs included) and re-encoded every
     // emitted pair. Actives retain COPIES of their payload struct (the
     // sort iterator reuses buffers); emitted rows are copies of one
     // UnsafeProjection over entity + probe payload + feature payload.
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
     val eField = p.schema.fields(0)
     val pW = pStructT.fields.length
     val fW = fStructT.fields.length
@@ -350,7 +301,7 @@ object IntervalJoin {
     * selection a pipeline uses to split a corpus.
     */
   def invert(probes: DataFrame, feats: DataFrame, mode: OverlapMode,
-      probeKeys: Seq[String], binSize: Long = 8192L): DataFrame = {
+      probeKeys: Seq[String], binSize: Long = IntervalBinRule.DefaultBinSize): DataFrame = {
     val matched = binnedJoin(probes, feats, mode, binSize)
       .select(probeKeys.map(col): _*).distinct()
     probes.join(matched, probeKeys, "left_anti")

@@ -229,27 +229,6 @@ object Similarity {
       .select("qid", "nid", "rank", "cos")
   }
 
-  /** ANN: top-k cosine within the query's single LSH bucket only (the
-    * sharpest/cheapest variant; see [[cosineKnnLshBanded]] for the
-    * recall-controlled scale path).
-    */
-  def cosineKnnLsh(corpus: DataFrame, idCol: String, embCol: String,
-      queryPred: String, k: Int, bits: Int = 8, dim: Int = 64): DataFrame = {
-    val base = withNorm(corpus, embCol)
-      .withColumn("__bkt", expr(lshBucketExpr(embCol, bits, dim)))
-    val q = base.where(expr(queryPred))
-      .select(col(idCol).as("qid"), col(embCol).as("qe"), col("__n2").as("qn2"),
-        col("__bkt").as("qb"))
-    val n = base.select(col(idCol).as("nid"), col(embCol).as("ne"), col("__n2").as("nn2"),
-      col("__bkt").as("nb"))
-    val scored = q.join(n, col("qb") === col("nb") && col("qid") =!= col("nid"))
-      .withColumn("cos", cosCol)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("qid", "nid", "rank", "cos")
-  }
-
   /** IVF cell assignment: every corpus vector -> the cell of its nearest
     * centroid by cosine (ties -> lowest centroid id). Centroids are the
     * corpus vectors picked by a DETERMINISTIC id rule (every

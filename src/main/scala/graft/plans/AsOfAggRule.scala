@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** SQL front-end for the POINT-IN-TIME (as-of) pattern — the second half
   * of closing the gap between the operator API and what a user types at a
@@ -56,17 +55,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * broadcast threshold, or under `spark.graft.asofAgg.force=1`.
   */
 object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
-
-  private def isCoord(e: Expression): Boolean =
-    e.dataType == LongType || e.dataType == IntegerType
-
-  private def sideOf(e: Expression, l: LogicalPlan, r: LogicalPlan): Option[Boolean] = {
-    val refs = e.references
-    if (refs.isEmpty) None
-    else if (refs.subsetOf(l.outputSet)) Some(true)
-    else if (refs.subsetOf(r.outputSet)) Some(false)
-    else None
-  }
+  import JoinSides._
 
   private def forced: Boolean =
     conf.getConfString("spark.graft.asofAgg.force", "0") == "1"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** SQL front-end for the interval-join family: an optimizer rule that
   * rewrites the interval-overlap THETA join pattern
@@ -12,11 +12,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *   a JOIN b ON a.entity = b.entity
   *             AND a.start < b.end AND a.end > b.start
   *
-  * into the engine's binned equi-join (ops.IntervalJoin.binnedJoin's plan
-  * shape, built directly in the logical algebra): both sides explode into
+  * into the engine's binned equi-join: both sides explode into
   * fixed-width coordinate bins, the join becomes an equi-join on
   * (entity, bin), and a pair is emitted ONLY in its intersection-start
-  * bin — exactly-once, no dedup. Registered via [[graft.functions.GraftExtensions]],
+  * bin — exactly-once, no dedup. The same [[rewrite]] builds the
+  * operator API's ops.IntervalJoin.binnedJoin, so SQL and API run one
+  * binned plan. Registered via [[graft.functions.GraftExtensions]],
   * so AD-HOC SQL (including the DuckDB oracle queries themselves) takes
   * the engine's physical path instead of Spark's default for this
   * pattern: a SortMergeJoin on `entity` alone with the range predicates
@@ -31,6 +32,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * recognized pattern are preserved untouched.
   */
 object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
+  import JoinSides._
+
+  /** Bin width of the binned join when neither the caller nor
+    * `spark.graft.intervalBin.size` names one. */
+  val DefaultBinSize = 8192L
 
   /** Bin width for the rewritten equi-join. Session-tunable
     * (`spark.graft.intervalBin.size`): per-key pair work in the binned
@@ -43,31 +49,14 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     * Correctness is width-independent (the emit-once proof holds for any
     * positive width); only the work shape changes.
     */
-  def BinSize: Long = {
-    val size =
-      try conf.getConfString("spark.graft.intervalBin.size", "8192").toLong
-      catch { case _: NumberFormatException => 8192L }
-    // the emit-once proof above needs a positive width; 0 divides by zero
-    require(size > 0, s"spark.graft.intervalBin.size must be positive, got $size")
-    size
+  private def binSize: Long = {
+    val size = conf.getConfString("spark.graft.intervalBin.size", DefaultBinSize.toString)
+    size.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"spark.graft.intervalBin.size must be a positive integer, got '$size'"))
   }
 
   private def toLong(e: Expression): Expression =
     if (e.dataType == LongType) e else Cast(e, LongType)
-
-  /** Which side of the join an expression's references live on entirely:
-    * Some(true)=left, Some(false)=right, None=mixed/neither.
-    */
-  private def sideOf(e: Expression, l: LogicalPlan, r: LogicalPlan): Option[Boolean] = {
-    val refs = e.references
-    if (refs.isEmpty) None
-    else if (refs.subsetOf(l.outputSet)) Some(true)
-    else if (refs.subsetOf(r.outputSet)) Some(false)
-    else None
-  }
-
-  private def isCoord(e: Expression): Boolean =
-    e.dataType == LongType || e.dataType == IntegerType
 
   /** Normalized strict inequality: (leftSideExpr, rightSideExpr, leftIsLess). */
   private def normalize(c: Expression, l: LogicalPlan, r: LogicalPlan)
@@ -103,16 +92,17 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** child + Generate(explode(sequence(s div B, (e-1) div B))) -> bin attr. */
-  private def withBins(child: LogicalPlan, s: Expression, e: Expression)
+  private def withBins(child: LogicalPlan, s: Expression, e: Expression, b: Literal)
       : (LogicalPlan, Attribute) = {
-    val b = Literal(BinSize, LongType)
     // Sequence is TimeZoneAwareExpression: without an explicit zone the
     // node stays unresolved and the optimizer rejects the rewritten plan
     val seq = new Sequence(
       IntegralDivide(toLong(s), b),
       IntegralDivide(Subtract(toLong(e), Literal(1L, LongType)), b))
       .withTimeZone(conf.sessionLocalTimeZone)
-    val binAttr = AttributeReference("__graft_bin", LongType, nullable = true)()
+    // explode over a sequence of longs never yields a null: a nullable
+    // attribute would only add isnotnull(bin) filters under the join
+    val binAttr = AttributeReference("__graft_bin", LongType, nullable = false)()
     (Generate(Explode(seq), Nil, outer = false, None, Seq(binAttr), child), binAttr)
   }
 
@@ -127,9 +117,10 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def forced: Boolean =
     conf.getConfString("spark.graft.intervalBin.force", "0") == "1"
 
-  /** The rewritten join is FORCED to a shuffle-merge join — the same
-    * contract as ops.IntervalJoin.binnedJoin's hint("shuffle_merge"), for
-    * the same reason, re-measured on this rule's own output: the binned
+  /** The rewritten join is FORCED to a shuffle-merge join. A broadcast
+    * plan leaves the pair-predicate work on the streamed side's scan
+    * partitions — ONE task for a single-row-group parquet file (76 s for
+    * q36 at sf0.1). And the binned
     * equi-join has FEW distinct keys (entities x coordinate-bins) with
     * thousands of rows per key, and a broadcast-hash plan walks the hashed
     * relation's duplicate chain per streamed row — random access per
@@ -150,29 +141,45 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     else JoinHint(f(h.leftHint), f(h.rightHint))
   }
 
-  /** Plans this rule must leave alone: its own rewrites (`__graft_bin`)
-    * and the engine's OWN binned kernels (`__bin` — ops.IntervalJoin):
-    * once filter pushdown folds the kernel's mode predicate into its
-    * (entity, __bin) equi-join, the condition matches this rule's
-    * patterns, and re-binning an already-binned join adds useless layers
-    * until the optimizer crawls — observed as a 20-minute ColumnPruning
-    * stall on q35's two-join pipeline with the q53/q55 force flag set.
-    * Both marker columns are REFERENCED by their join conditions, so
-    * column pruning cannot strip them (the lesson of the retired
-    * `__graft_nobin` residue marker, which nothing referenced). A user
-    * column literally named `__bin` is an accepted blind spot
-    * (documented here).
+  /** Plans this rule must leave alone: binned joins, its own SQL rewrites
+    * and the operator API's alike (`__graft_bin`). Once filter pushdown
+    * folds a mode predicate into a binned (entity, bin) equi-join, the
+    * condition matches this rule's patterns, and re-binning an
+    * already-binned join adds useless layers until the optimizer crawls —
+    * observed as a 20-minute ColumnPruning stall on q35's two-join
+    * pipeline with the q53/q55 force flag set. The marker column is
+    * REFERENCED by the join condition, so column pruning cannot strip it
+    * (the lesson of the retired `__graft_nobin` residue marker, which
+    * nothing referenced).
     */
-  private def marker(p: LogicalPlan): Boolean =
-    p.output.exists(a => a.name == "__graft_bin" || a.name == "__bin")
+  private def marker(p: LogicalPlan): Boolean = p.output.exists(_.name == "__graft_bin")
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(l, r, Inner, Some(cond), hint)
-        if j.resolved &&
-          (forced ||
-            (l.stats.sizeInBytes > conf.autoBroadcastJoinThreshold &&
-              r.stats.sizeInBytes > conf.autoBroadcastJoinThreshold)) &&
-          !marker(l) && !marker(r) => // already rewritten / residue branch
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    // read once per pass, and only once a join is rewritten
+    lazy val width = binSize
+    plan.transformUp {
+      case j @ Join(l, r, Inner, Some(_), _)
+          if j.resolved &&
+            (forced ||
+              (l.stats.sizeInBytes > conf.autoBroadcastJoinThreshold &&
+                r.stats.sizeInBytes > conf.autoBroadcastJoinThreshold)) &&
+            !marker(l) && !marker(r) => // already rewritten
+        rewrite(j, width)
+    }
+  }
+
+  /** The overlap or containment rewrite of a resolved inner join at bin
+    * width `width` (evaluated once, when a pattern matches); any other
+    * join comes back unchanged.
+    */
+  private[graft] def rewrite(j: Join, width: => Long): LogicalPlan = j match {
+    case Join(l, r, Inner, Some(cond), hint) =>
+      lazy val bin = {
+        val w = width
+        // the emit-once proofs need a positive width; 0 divides by zero
+        require(w > 0, s"spark.graft.intervalBin.size must be positive, got $w")
+        Literal(w, LongType)
+      }
       val conjuncts = splitConjunctivePredicates(cond)
       val eqs = conjuncts.filter {
         case EqualTo(a, b) => (sideOf(a, l, r), sideOf(b, l, r)) match {
@@ -192,27 +199,26 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
             if eqs.nonEmpty && cLess != cGreater =>
           // a.start < b.end AND a.end > b.start with an entity equality:
           // the overlap pattern. Bin both sides on their own (start, end).
-          val (lGen, lBin) = withBins(l, lStart, lEnd)
-          val (rGen, rBin) = withBins(r, rStart, rEnd)
+          val (lGen, lBin) = withBins(l, lStart, lEnd, bin)
+          val (rGen, rBin) = withBins(r, rStart, rEnd, bin)
           val emitOnce = EqualTo(
-            IntegralDivide(Greatest(Seq(toLong(lStart), toLong(rStart))),
-              Literal(BinSize, LongType)),
-            lBin)
+            IntegralDivide(Greatest(Seq(toLong(lStart), toLong(rStart))), bin), lBin)
           val newCond = (eqs :+ EqualTo(lBin, rBin)) ++
             conjuncts.filterNot(eqs.contains) :+ emitOnce
           logInfo(s"graft: rewrote interval theta join to (entity, bin) equi-join " +
-            s"(bin=$BinSize, ${eqs.length} entity key(s))")
+            s"(bin=${bin.value}, ${eqs.length} entity key(s))")
           Project(j.output, Join(lGen, rGen, Inner,
             Some(newCond.reduce(And)), shuffleMerge(hint)))
         case _ if eqs.nonEmpty =>
           containment(conjuncts, l, r) match {
             case Some((iLo, iHi, oLo, oHi, innerIsLeft)) =>
-              rewriteContainment(j, l, r, hint, cond, conjuncts, eqs,
+              rewriteContainment(j, l, r, hint, bin, conjuncts, eqs,
                 iLo, iHi, oLo, oHi, innerIsLeft)
             case None => j
           }
         case _ => j
       }
+    case _ => j
   }
 
   /** Detect the CONTAINMENT pattern (VERDICT r4 #5 — Contained /
@@ -277,13 +283,12 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     * span in the overlap rewrite, inherent to fixed-width binning.
     */
   private def rewriteContainment(j: Join, l: LogicalPlan, r: LogicalPlan,
-      hint: JoinHint, cond: Expression, conjuncts: Seq[Expression],
+      hint: JoinHint, b: Literal, conjuncts: Seq[Expression],
       eqs: Seq[Expression], iLo: Expression, iHi: Expression,
       oLo: Expression, oHi: Expression, innerIsLeft: Boolean): LogicalPlan = {
     val inner = if (innerIsLeft) l else r
-    val (iGen, iBin) = withBins(inner, iLo, iHi)
-    val (oGen, oBin) = withBins(if (innerIsLeft) r else l, oLo, oHi)
-    val b = Literal(BinSize, LongType)
+    val (iGen, iBin) = withBins(inner, iLo, iHi, b)
+    val (oGen, oBin) = withBins(if (innerIsLeft) r else l, oLo, oHi, b)
     def binOf(e: Expression) = IntegralDivide(toLong(e), b)
     def binOfHi(e: Expression) =
       IntegralDivide(Subtract(toLong(e), Literal(1L, LongType)), b)
@@ -296,7 +301,7 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
       if (innerIsLeft) Join(iGen, oGen, Inner, Some(newCond.reduce(And)), shuffleMerge(hint))
       else Join(oGen, iGen, Inner, Some(newCond.reduce(And)), shuffleMerge(hint))
     logInfo(s"graft: rewrote containment theta join to (entity, bin) equi-join " +
-      s"(bin=$BinSize, ${eqs.length} entity key(s), inner=${if (innerIsLeft) "left" else "right"})")
+      s"(bin=${b.value}, ${eqs.length} entity key(s), inner=${if (innerIsLeft) "left" else "right"})")
     Project(j.output, binned)
   }
 }

@@ -44,16 +44,15 @@ object StreamQueries {
     // State-store count is a STATE-VOLUME knob, not a CPU knob (guide §2.2:
     // fewer, larger partitions; the store partitioning is fixed at
     // checkpoint creation, so production sizes it to projected state, not
-    // core count). Parameterized, default 8; scoped to the stream's
-    // lifetime and restored even on failure — the surrounding batch
-    // session's shuffle partitioning is untouched (no session-state bleed).
-    val parts = spark.conf.get("spark.graft.stream.shufflePartitions", "8")
+    // core count). 8 stores, scoped to the stream's lifetime and restored
+    // even on failure — the surrounding batch session's shuffle
+    // partitioning is untouched (no session-state bleed).
     val prev = spark.conf.get("spark.sql.shuffle.partitions", null)
     // the checkpoint is scratch, not a resume point — and it is RAM-backed
     // (/dev/shm), so it must go even when the query throws (ADVICE r4: the
     // success-path-only delete leaked a checkpoint dir per failed run)
     try {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
       val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()

@@ -36,17 +36,6 @@ object StreamingFeatures {
       .groupBy(window(col("ts"), window_), col("user_id"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("vsum"))
 
-  /** Session windows (gap-based) per user — the streaming twin of
-    * WindowFeatures.sessionize.
-    */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame =
-    events
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("vsum"))
-
   /** Micro-batch runner with cross-batch state merge (≙ depth.rs
     * partial+final merge, 264-290): each micro-batch computes partial
     * per-user aggregates; `merge` folds them into a global state table.
@@ -70,8 +59,8 @@ object StreamingFeatures {
         // atomic-ish swap: state_next -> state
         val fs = new java.io.File(s"$stateDir/state")
         if (fs.exists()) { deleteRec(fs) }
-        new java.io.File(s"$stateDir/state_next").renameTo(fs)
-        ()
+        val next = new java.io.File(s"$stateDir/state_next")
+        if (!next.renameTo(fs)) throw new java.io.IOException(s"cannot move $next to $fs")
       }
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$stateDir/_checkpoint")

@@ -16,7 +16,7 @@ object PlanCut {
   def apply(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[Dataset[Row]]
     val qe = ds.queryExecution
-    Dataset.ofRows(ds.sparkSession,
+    Bridge.dataFrame(ds.sparkSession,
       LogicalRDD(qe.analyzed.output, qe.toRdd)(ds.sparkSession, Some(qe.optimizedPlan.stats)))
   }
 }

@@ -1,13 +1,17 @@
 package org.apache.spark.sql.graftx
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Bridge to Spark 4's private[sql] Column <-> Expression conversions so
-  * graft's custom Catalyst expressions can surface as Columns.
+  * graft's custom Catalyst expressions can surface as Columns, and to the
+  * DataFrame over a logical plan that graft builds itself.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

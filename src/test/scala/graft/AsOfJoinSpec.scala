@@ -41,7 +41,10 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("broadcast path == brute-force as-of") {
-    assert(run(AsOfJoin.broadcastPath(probes, feats)) == oracle)
+    val (df, jobs, _) = jobsOf(AsOfJoin.join(probes, feats))
+    assert(jobs.isEmpty, s"a driver-local feature side decides and collects without a job: $jobs")
+    assert(!df.queryExecution.executedPlan.toString.contains("Window"))
+    assert(run(df) == oracle)
   }
 
   test("auto path == brute-force as-of (routes small feature side to broadcast)") {
@@ -61,8 +64,10 @@ class AsOfJoinSpec extends SparkSpec {
       }.toMap
     val want = byEvent(AsOfJoin.windowed(p, feats))
     assert(want.values.count(_.nonEmpty) > 300)
-    assert(byEvent(AsOfJoin.broadcastPath(p, feats)) == want)
-    assert(byEvent(AsOfJoin.join(p, feats)) == want)
+    val (df, jobs, _) = jobsOf(AsOfJoin.join(p, feats))
+    assert(jobs.isEmpty, s"a driver-local feature side decides and collects without a job: $jobs")
+    assert(!df.queryExecution.executedPlan.toString.contains("Window"))
+    assert(byEvent(df) == want)
   }
 
   test("equal timestamps are visible (t'=t counts, zero leakage beyond)") {

@@ -250,9 +250,10 @@ class IntervalBinRuleSpec extends SparkSpec {
         val df = graft.ops.IntervalJoin.binnedJoin(
           a.withColumnRenamed("probe_id", "pid"), b.withColumnRenamed("fid", "xid"),
           mode, 1024L)
-        val plan = df.queryExecution.optimizedPlan.toString
-        assert(!plan.contains("__graft_bin"),
-          s"rule must not touch the kernel's own binned join ($mode):\n$plan")
+        val plan = df.queryExecution.optimizedPlan
+        // one bin explode per side: the kernel's join is binned once
+        assert(plan.collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }
+          .length == 2, s"rule must not touch the kernel's own binned join ($mode):\n$plan")
       }
     } finally {
       spark.conf.set("spark.graft.intervalBin.force", "0")
@@ -301,7 +302,7 @@ class IntervalBinRuleSpec extends SparkSpec {
       spark.experimental.extraOptimizations :+ IntervalBinRule
     try {
       spark.conf.set("spark.graft.intervalBin.force", "1")
-      for (size <- Seq("0", "-256")) {
+      for (size <- Seq("0", "-256", "abc", "8k")) {
         spark.conf.set("spark.graft.intervalBin.size", size)
         val e = intercept[Exception](spark.sql(
           """SELECT p.probe_id, f.fid FROM probes_z p JOIN feats_z f

@@ -53,7 +53,14 @@ class IntervalJoinSpec extends SparkSpec {
       assert(pairs(IntervalJoin.binnedJoin(probes, feats, mode, 64L)) == bruteForce(mode))
     }
     test(s"broadcast path == brute force [$m]") {
-      assert(pairs(IntervalJoin.broadcastJoin(probes, feats, mode)) == bruteForce(mode))
+      // two copies of the probes make the feature side the smaller one,
+      // so it is the build side (the auto join tests build on the probes)
+      val p2 = probes.union(probes)
+      assert(BroadcastSide.planBytes(feats) < BroadcastSide.planBytes(p2))
+      val (df, jobs, _) = jobsOf(IntervalJoin.join(p2, feats, mode))
+      assert(jobs.isEmpty, s"the row bound decides: $jobs")
+      assert(!binned(df))
+      assert(pairs(df) == bruteForce(mode))
     }
     test(s"sweep path == brute force [$m]") {
       assert(pairs(IntervalJoin.sweepJoin(probes, feats, mode)) == bruteForce(mode))
@@ -66,6 +73,8 @@ class IntervalJoinSpec extends SparkSpec {
 
   for (mode <- Seq(Overlap, Contained, ContainsRegion)) {
     test(s"auto join: a driver-local side decides and collects without a job [$mode]") {
+      assert(BroadcastSide.planBytes(probes) < BroadcastSide.planBytes(feats),
+        "the probe side is the build side")
       val (df, jobs, _) = jobsOf(IntervalJoin.join(probes, feats, mode))
       assert(jobs.isEmpty, s"the row bound decides: $jobs")
       assert(!binned(df))
@@ -89,6 +98,28 @@ class IntervalJoinSpec extends SparkSpec {
     assert(expected.head.getLong(0) == 1100000L, "probe i overlaps feature i only")
   }
 
+  test("null entities never match, on every interval path") {
+    val p = Seq[(Long, String, Long, Long)]((1L, null, 12L, 15L), (2L, "x", 12L, 15L))
+      .toDF("probe_id", "entity", "start", "end")
+    val f = Seq[(String, Long, Long, Long)]((null, 10L, 20L, 1L), ("x", 10L, 20L, 2L))
+      .toDF("entity", "start", "end", "fid")
+    // brute force with SQL equality: null = null is not true
+    val expected = Set((2L, 2L))
+    val paths = Seq(
+      "binned" -> IntervalJoin.binnedJoin(p, f, Overlap, 16L),
+      "broadcast features" -> IntervalJoin.join(p.union(p), f, Overlap),
+      "broadcast probes" -> IntervalJoin.join(p, f.union(f), Overlap),
+      "sweep" -> IntervalJoin.sweepJoin(p, f, Overlap))
+    for ((name, df) <- paths) assert(pairs(df) == expected, name)
+  }
+
+  test("binned plan has no filter on the bin column") {
+    val plan = IntervalJoin.binnedJoin(probes, feats, Overlap, 64L)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("__graft_bin"), plan)
+    assert(!plan.linesIterator.exists(l => l.contains("Filter") && l.contains("__graft_bin")), plan)
+  }
+
   test("binned path emits each pair exactly once (no dedup needed)") {
     val df = IntervalJoin.binnedJoin(probes, feats, Overlap, 64L)
     assert(df.count() == df.select("probe_id", "fid").distinct().count())
@@ -101,7 +132,7 @@ class IntervalJoinSpec extends SparkSpec {
     val p = Seq((1L, "x", 20L, 30L), (2L, "x", 0L, 10L), (3L, "x", 19L, 20L), (4L, "x", 10L, 11L))
       .toDF("probe_id", "entity", "start", "end")
     for (j <- Seq(IntervalJoin.binnedJoin(p, f, Overlap, 16L),
-        IntervalJoin.broadcastJoin(p, f, Overlap),
+        IntervalJoin.join(p, f, Overlap),
         IntervalJoin.sweepJoin(p, f, Overlap))) {
       assert(pairs(j) == Set((3L, 1L), (4L, 1L)), "touch-at-boundary must not match")
     }

@@ -111,7 +111,8 @@ class TextDedupSpec extends SparkSpec {
       (i.toLong, Array.fill(64)(rnd.nextFloat()))
     }
     val df = vecs.toDF("vec_id", "embedding")
-    val lsh = Similarity.cosineKnnLsh(df, "vec_id", "embedding", "vec_id % 40 = 0", 3, 8, 64)
+    val lsh = Similarity.cosineKnnLshBanded(df, "vec_id", "embedding", "vec_id % 40 = 0", 3,
+      bandBits = 8, nBands = 1, dim = 64)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val brute = Similarity.cosineKnnBrute(df, "vec_id", "embedding", "vec_id % 40 = 0", 200)
       .select("qid", "nid").as[(Long, Long)].collect().toSet

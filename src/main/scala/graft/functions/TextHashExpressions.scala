@@ -127,7 +127,9 @@ object TextHash {
     var ascii = true
     var j = 0
     while (ascii && j < bytes.length) { if ((bytes(j) & 0x80) != 0) ascii = false; j += 1 }
-    if (ascii) minHashLanesAscii(bytes, n, k)
+    if (ascii)
+      minHashLanesOf(math.max(bytes.length - n + 1, 1), k)( // short text: one shingle
+        (md, i) => md.update(bytes, i, math.min(n, bytes.length - i)))
     else {
       // codepoint path: shingle i = codepoints [i, i+n) re-encoded UTF-8 —
       // identical to `substring(text, i, n)` semantics for any input
@@ -138,53 +140,25 @@ object TextHash {
         val len = math.min(n, cps.length - i)
         new String(cps, i, len).getBytes(java.nio.charset.StandardCharsets.UTF_8)
       }
-      minHashLanesOver(shingles, k)
+      minHashLanesOf(count, k)((md, i) => md.update(shingles(i)))
     }
   }
 
-  private def minHashLanesAscii(bytes: Array[Byte], n: Int, k: Int): Array[UTF8String] = {
+  /** The lane-min loop over `count` shingles; `feed(md, i)` hands shingle
+    * i's bytes to the digest after its salt. */
+  private def minHashLanesOf(count: Int, k: Int)(
+      feed: (java.security.MessageDigest, Int) => Unit): Array[UTF8String] = {
     val md = mdLocal.get()
     val nSalts = (k + 3) / 4
     val mins = Array.fill(k)(0x1FFFFFFFFL) // > any unsigned 32-bit lane
-    val count = math.max(bytes.length - n + 1, 1)
     val salts = Array.tabulate(nSalts)(s => s"$s:".getBytes("UTF-8"))
     var i = 0
     while (i < count) {
-      val len = math.min(n, bytes.length - i) // short-text single shingle
       var s = 0
       while (s < nSalts) {
         md.reset()
         md.update(salts(s))
-        md.update(bytes, i, len)
-        val dg = md.digest()
-        var lane = 0
-        while (lane < 4 && s * 4 + lane < k) {
-          val o = lane * 4
-          val v = ((dg(o) & 0xffL) << 24) | ((dg(o + 1) & 0xffL) << 16) |
-            ((dg(o + 2) & 0xffL) << 8) | (dg(o + 3) & 0xffL)
-          val idx = s * 4 + lane
-          if (v < mins(idx)) mins(idx) = v
-          lane += 1
-        }
-        s += 1
-      }
-      i += 1
-    }
-    mins.map(v => UTF8String.fromString(f"${v}%08x"))
-  }
-
-  private def minHashLanesOver(shingles: Array[Array[Byte]], k: Int): Array[UTF8String] = {
-    val md = mdLocal.get()
-    val nSalts = (k + 3) / 4
-    val mins = Array.fill(k)(0x1FFFFFFFFL)
-    val salts = Array.tabulate(nSalts)(s => s"$s:".getBytes("UTF-8"))
-    var i = 0
-    while (i < shingles.length) {
-      var s = 0
-      while (s < nSalts) {
-        md.reset()
-        md.update(salts(s))
-        md.update(shingles(i))
+        feed(md, i)
         val dg = md.digest()
         var lane = 0
         while (lane < 4 && s * 4 + lane < k) {

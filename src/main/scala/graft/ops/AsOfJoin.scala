@@ -1,9 +1,11 @@
 package graft.ops
 
+import graft.plans.AsOfAggRule
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.BoundReference
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, GetStructField}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Point-in-time (as-of) join: for each probe (entity, t), the latest
@@ -11,46 +13,37 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * leakage by construction (reference: closed point-containment probe,
   * src/utils/tree.rs:66-94, reinterpreted per BASELINE.json north_rule).
   *
-  * Column convention: probes carry (`entity`, `t`, payload...); feats carry
-  * (`entity`, `t`, values...). Output: probe columns + `f_t` (matched
-  * feature time, null if none) + feature value columns (null if none).
+  * Column convention: probes carry `entity`, `t` and payload columns in
+  * any order; feats carry (`entity`, `t`, values...). Output: the probe's
+  * columns in their own order + `f_t` (matched feature time, null if none)
+  * + feature value columns (null if none). A null entity or a null time
+  * never matches (SQL equality, as in DuckDB's ASOF join).
   *
   * Two physical paths:
-  *  1. [[windowed]] — tag-union + `last(struct, ignoreNulls)` over an
-  *     (entity, t)-ordered frame `rowsBetween(unboundedPreceding, 0)`.
-  *     Pure Catalyst: one shuffle on entity, whole-stage codegen, scales by
+  *  1. [[windowed]] — AsOfAggRule's fill plan: the latest feature struct
+  *     over an (entity, t)-ordered frame up to the probe's own row. Pure
+  *     Catalyst: one shuffle on entity, whole-stage codegen, scales by
   *     entity cardinality; the frame bound IS the leakage guarantee.
   *  2. broadcast ([[join]] with a provably small feature side): broadcast
   *     per-entity time-sorted arrays, binary-search per probe, zero shuffle.
-  *     Like [[windowed]], it pairs a null entity with null-entity features.
   */
 object AsOfJoin {
 
   /** Pure-Catalyst union-window as-of merge. Feature rows sort BEFORE probe
-    * rows at equal t (tag 0 < 1), so t' == t is visible — the `<=` bound.
-    * If multiple feature rows share (entity, t), the one with the largest
-    * `tiebreak` column wins deterministically.
+    * rows at equal t, so t' == t is visible — the `<=` bound. Among feature
+    * rows sharing (entity, t) the pick is unspecified.
     */
-  def windowed(probes: DataFrame, feats: DataFrame, tiebreak: Option[String] = None): DataFrame = {
-    val pPay = probes.columns.filterNot(Set("entity", "t"))
-    val fVal = feats.columns.filterNot(Set("entity", "t"))
-    val fStruct = struct((col("t").as("f_t") +: fVal.map(col)): _*)
-    val tb = tiebreak.map(col).getOrElse(lit(0L))
-    val fu = feats.select(col("entity"), col("t"), lit(0).as("__tag"),
-      tb.cast("long").as("__tb"), fStruct.as("__fv"),
-      lit(null).cast(StructType(probes.schema.fields.filter(f => pPay.contains(f.name)))).as("__pv"))
-    val pu = probes.select(col("entity"), col("t"), lit(1).as("__tag"), lit(0L).as("__tb"),
-      lit(null).cast(fu.schema("__fv").dataType).as("__fv"),
-      struct(pPay.map(col): _*).as("__pv"))
-    val w = Window.partitionBy(col("entity"))
-      .orderBy(col("t"), col("__tag"), col("__tb"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    fu.unionByName(pu)
-      .withColumn("__last", last(col("__fv"), ignoreNulls = true).over(w))
-      .where(col("__tag") === 1)
-      .select((Seq(col("entity"), col("t")) ++ pPay.map(n => col("__pv").getField(n).as(n)) ++
-        Seq(col("__last").getField("f_t").as("f_t")) ++
-        fVal.map(n => col("__last").getField(n).as(n))): _*)
+  def windowed(probes: DataFrame, feats: DataFrame): DataFrame = {
+    val p = probes.queryExecution.analyzed
+    val f = feats.queryExecution.analyzed
+    def named(plan: LogicalPlan, n: String) = plan.output.find(_.name == n).getOrElse(
+      throw new IllegalArgumentException(s"as-of input has no column `$n`: ${plan.output}"))
+    val fVal = f.output.filterNot(a => a.name == "entity" || a.name == "t")
+    val (plan, fill) = AsOfAggRule.fillPlan(p, Seq(named(p, "entity")), named(p, "t"),
+      f, Seq(named(f, "entity")), named(f, "t"), fVal)
+    val out = p.output ++ (Alias(GetStructField(fill, 0), "f_t")() +:
+      fVal.zipWithIndex.map { case (a, i) => Alias(GetStructField(fill, i + 1), a.name)() })
+    Bridge.dataFrame(probes.sparkSession, Project(out, plan))
   }
 
   /** Auto path (same decision as IntervalJoin.join): broadcast the feature
@@ -60,22 +53,30 @@ object AsOfJoin {
     * stats ceiling and the join stays windowed (one shuffle, zero driver
     * traffic).
     */
-  def join(probes: DataFrame, feats: DataFrame, tiebreak: Option[String] = None): DataFrame = {
-    // the broadcast path has no tiebreak semantics knob; only take it when
-    // the default (latest by time, any-dup) semantics were requested.
-    if (tiebreak.isEmpty && BroadcastSide.planBytes(feats) <= BroadcastSide.MaxPlanBytes &&
-        BroadcastSide.withinCap(feats))
+  def join(probes: DataFrame, feats: DataFrame): DataFrame =
+    if (BroadcastSide.planBytes(feats) <= BroadcastSide.MaxPlanBytes && BroadcastSide.withinCap(feats))
       broadcastChecked(probes, feats)
-    else windowed(probes, feats, tiebreak)
+    else windowed(probes, feats)
+
+  /** Greatest i with `ts(i) <= t` in the ascending `ts`, or -1. */
+  private[graft] def lastAtOrBefore(ts: Array[Long], t: Long): Int = {
+    var lo = 0; var hi = ts.length - 1; var ans = -1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      if (ts(mid) <= t) { ans = mid; lo = mid + 1 } else hi = mid - 1
+    }
+    ans
   }
 
   /** Broadcast as-of through [[BroadcastSide.join]] (row cap proven by
-    * [[join]]): features time-sorted per entity; each probe binary-searches
-    * the greatest t' <= t and gets (f_t, values...), all null on a miss.
+    * [[join]]): features with a non-null entity and time, time-sorted per
+    * entity; each probe binary-searches the greatest t' <= t and gets
+    * (f_t, values...), all null on a miss or a null t.
     */
   private def broadcastChecked(probes: DataFrame, feats: DataFrame): DataFrame = {
     val fVal = feats.columns.filterNot(Set("entity", "t"))
-    val f = feats.select((Seq(col("entity"), col("t")) ++ fVal.map(col)): _*)
+    val f = feats.where(col("entity").isNotNull && col("t").isNotNull)
+      .select((Seq(col("entity"), col("t")) ++ fVal.map(col)): _*)
     val pFields = probes.schema.fields
     val fFields = f.schema.fields
     // probe key ordinals resolved by name: the probe frame may carry
@@ -94,14 +95,8 @@ object AsOfJoin {
         (sorted.map(i => rows(i).getLong(1)), sorted)
       }) {
       case (pr, (ts, order), rows) =>
-        val t = pr.getLong(pT)
-        // greatest index with ts(i) <= t
-        var lo = 0; var hi = ts.length - 1; var ans = -1
-        while (lo <= hi) {
-          val mid = (lo + hi) >>> 1
-          if (ts(mid) <= t) { ans = mid; lo = mid + 1 } else hi = mid - 1
-        }
-        if (ans < 0) Iterator.empty else Iterator.single(rows(order(ans)))
+        val at = if (pr.isNullAt(pT)) -1 else lastAtOrBefore(ts, pr.getLong(pT))
+        if (at < 0) Iterator.empty else Iterator.single(rows(order(at)))
     }
   }
 }

@@ -21,11 +21,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * but one pair away — per-entity |P|x|F| work and a leakage hazard the
   * reference's tree lookup exists to avoid (tree.rs:66-94). This rule
   * re-plans the (Aggregate over Join) compound onto the engine's
-  * leakage-safe windowed as-of shape (ops.AsOfJoin.windowed, q05/q31/q40):
-  * tag-union features(0) and probes(1), one window
-  * `last(value, ignoreNulls) OVER (PARTITION BY entity ORDER BY t, tag
-  * ROWS UNBOUNDED PRECEDING..CURRENT ROW)` per filled column, keep probe
-  * rows with a non-null filled t (the inner join drops match-less
+  * leakage-safe windowed as-of shape, [[fillPlan]] (also the plan of
+  * ops.AsOfJoin.windowed, q05/q31): tag-union features(0) and probes(1),
+  * one window `last(struct(t, v...), ignoreNulls) OVER (PARTITION BY
+  * entity ORDER BY t, tag ROWS UNBOUNDED PRECEDING..CURRENT ROW)`, keep
+  * probe rows with a non-null fill (the inner join drops match-less
   * probes), and aggregate the FILLS — O((|P|+|F|) log) per entity, one
   * shuffle, no pair blow-up.
   *
@@ -37,10 +37,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    max over rows of (max over that row's matches) = max over pairs,
   *    and the same holds for max(f.t);
   *  - a null entity/t never matches in the theta join (null comparison),
-  *    and never fills here: both union inputs filter IsNotNull(entity)
-  *    and IsNotNull(t) (a window PARTITION would otherwise group nulls
-  *    together); a probe with no fill is dropped by the filled-t filter
-  *    exactly as the inner join drops it.
+  *    and never fills here (see [[fillPlan]]); a probe with no fill is
+  *    dropped by the fill filter exactly as the inner join drops it.
   *  - ties: max_by across equal f.t is non-deterministic in the theta
   *    plan and window-order-dependent here — the same contract Spark
   *    documents for max_by itself.
@@ -51,14 +49,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * references the probe side only; every other output aggregate is
   * max_by(<feature-side expr>, f.t) or max(f.t) on the SAME f.t. A
   * count(*), a strict `<`, or any extra conjunct leaves Spark's plan
-  * alone. Guarded like IntervalBinRule: fires when both sides exceed the
-  * broadcast threshold, or under `spark.graft.asofAgg.force=1`.
+  * alone. Guarded like IntervalBinRule: fires only when both sides exceed
+  * the broadcast threshold (a threshold of -1 lets it fire at any size).
   */
 object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
   import JoinSides._
-
-  private def forced: Boolean =
-    conf.getConfString("spark.graft.asofAgg.force", "0") == "1"
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // column pruning usually leaves a Project between the Aggregate and
@@ -77,9 +72,8 @@ object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
       unwrapped match {
         case Some((j @ Join(l, r, Inner, Some(cond), _), subst))
             if j.resolved &&
-              (forced ||
-                (l.stats.sizeInBytes > conf.autoBroadcastJoinThreshold &&
-                  r.stats.sizeInBytes > conf.autoBroadcastJoinThreshold)) =>
+              l.stats.sizeInBytes > conf.autoBroadcastJoinThreshold &&
+              r.stats.sizeInBytes > conf.autoBroadcastJoinThreshold =>
           def sub(e: Expression): Expression = e.transformUp {
             case a: Attribute if subst.contains(a) => subst(a)
           }
@@ -154,54 +148,11 @@ object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
       }
     if (kinds.exists(_.isEmpty)) return None
 
-    // ---- build the windowed as-of plan ----
-    def notNull(p: LogicalPlan, es: Seq[Expression]): LogicalPlan =
-      Filter((es.map(IsNotNull(_): Expression)).reduce(And), p)
-    val pClean = notNull(probe, entPairs.map(_._1) :+ pT)
-    val fClean = notNull(feat, entPairs.map(_._2) :+ fT)
-    def nul(e: Expression): Expression = Literal(null, e.dataType)
-    // The fill source is ONE struct(t, v0..vn) — non-null for every
-    // feature row even when a value column is null — mirroring
-    // ops.AsOfJoin.windowed's __fv struct (ADVICE r5 high: per-column
-    // Last(v, ignoreNulls) fills skipped a NULL value at the max f.t and
-    // returned the most recent NON-null value instead — silent wrong
-    // results for nullable max_by value columns).
-    val fvStruct = CreateNamedStruct(
-      Seq(Literal("t"), fT) ++ maxByVals.zipWithIndex.flatMap { case (v, i) =>
-        Seq(Literal(s"v$i"), v) })
-    // union layout: [ent*, t, tag, fv-struct, probeCols*]
-    // PROBE FIRST: Union keeps the first child's exprIds, so the probe's
-    // own columns flow through to the final aggregate unchanged
-    val pProj = Project(
-      entPairs.map { case (pe, _) => Alias(pe, "__g_e")() } ++
-        Seq(Alias(pT, "__g_t")(), Alias(Literal(1), "__g_tag")(),
-          Alias(Literal(null, fvStruct.dataType), "__g_fv")()) ++
-        probe.output,
-      pClean)
-    val fProj = Project(
-      entPairs.map { case (_, fe) => Alias(fe, "__g_e")() } ++
-        Seq(Alias(fT, "__g_t")(), Alias(Literal(0), "__g_tag")(),
-          Alias(fvStruct, "__g_fv")()) ++
-        probe.output.map(a => Alias(nul(a), a.name)()),
-      fClean)
-    val union = Union(Seq(pProj, fProj))
-    val uo = union.output
-    val nEnt = entPairs.length
-    val (entA, tA, tagA) = (uo.take(nEnt), uo(nEnt), uo(nEnt + 1))
-    val fvA = uo(nEnt + 2)
-    val frame = SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow)
-    val spec = WindowSpecDefinition(entA,
-      Seq(SortOrder(tA, Ascending), SortOrder(tagA, Ascending)), frame)
-    val fillFv = Alias(WindowExpression(
-      Last(fvA, ignoreNulls = true).toAggregateExpression(), spec), "__g_fill_fv")()
-    val win = Window(Seq(fillFv), entA,
-      Seq(SortOrder(tA, Ascending), SortOrder(tagA, Ascending)), union)
-    val kept = Filter(And(EqualTo(tagA, Literal(1)),
-      IsNotNull(fillFv.toAttribute)), win)
-    def fillT: Expression =
-      GetStructField(fillFv.toAttribute, 0, Some("t"))
-    def fillV(i: Int): Expression =
-      GetStructField(fillFv.toAttribute, i + 1, Some(s"v$i"))
+    val (filled, fill) = fillPlan(probe, entPairs.map(_._1), pT,
+      feat, entPairs.map(_._2), fT, maxByVals.toSeq)
+    val kept = Filter(IsNotNull(fill), filled)
+    def fillT: Expression = GetStructField(fill, 0, Some("t"))
+    def fillV(i: Int): Expression = GetStructField(fill, i + 1, Some(s"v$i"))
     // final aggregate: identical group keys and output names/exprIds;
     // max_by/max collapse onto the fills (max over rows of per-row max
     // == max over pairs). The filled struct is extracted per field, so a
@@ -219,8 +170,49 @@ object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
       }.asInstanceOf[NamedExpression]
     }
     logInfo(s"graft: rewrote as-of aggregate (join + max_by) onto the " +
-      s"windowed point-in-time plan ($nEnt entity key(s), " +
+      s"windowed point-in-time plan (${entPairs.length} entity key(s), " +
       s"${maxByVals.length} filled column(s))")
     Some(Aggregate(groupExprs, newAggExprs, kept))
+  }
+
+  /** The windowed as-of plan, shared by this rule and
+    * ops.AsOfJoin.windowed: the probe rows (tag 1) tag-unioned with the
+    * feature rows whose keys and time are all non-null (tag 0), then
+    * `last(struct(t, v0..vn), ignoreNulls)` over each entity ordered by
+    * (t, tag), keeping the probe rows. The fill source is ONE struct,
+    * non-null for every feature row even when a value is null, so a null
+    * value at the winning t stays null (per-column fills would skip it).
+    * PROBE FIRST: Union keeps the first child's exprIds, so the probe's
+    * own attributes flow through to the caller unchanged.
+    *
+    * Returns the plan and its fill attribute: the latest feature's
+    * (t, v0..vn) with f.t <= p.t (features sort before probes at equal t),
+    * null where there is none. A null key or time never matches, as under
+    * SQL equality: a partition holding a probe with a null key holds no
+    * feature, and a probe with a null t sorts first in its partition.
+    */
+  private[graft] def fillPlan(probe: LogicalPlan, pKeys: Seq[Expression], pT: Expression,
+      feat: LogicalPlan, fKeys: Seq[Expression], fT: Expression,
+      vals: Seq[Expression]): (LogicalPlan, Attribute) = {
+    val fClean = Filter((fKeys :+ fT).map(IsNotNull(_): Expression).reduce(And), feat)
+    val fvStruct = CreateNamedStruct(Seq(Literal("t"), fT) ++
+      vals.zipWithIndex.flatMap { case (v, i) => Seq(Literal(s"v$i"), v) })
+    // union layout: [ent*, t, tag, fv-struct, probeCols*]
+    val pProj = Project(pKeys.map(Alias(_, "__g_e")()) ++
+      Seq(Alias(pT, "__g_t")(), Alias(Literal(1), "__g_tag")(),
+        Alias(Literal(null, fvStruct.dataType), "__g_fv")()) ++ probe.output, probe)
+    val fProj = Project(fKeys.map(Alias(_, "__g_e")()) ++
+      Seq(Alias(fT, "__g_t")(), Alias(Literal(0), "__g_tag")(), Alias(fvStruct, "__g_fv")()) ++
+      probe.output.map(a => Alias(Literal(null, a.dataType), a.name)()), fClean)
+    val union = Union(Seq(pProj, fProj))
+    val uo = union.output
+    val (entA, tA, tagA, fvA) = (uo.take(pKeys.length), uo(pKeys.length),
+      uo(pKeys.length + 1), uo(pKeys.length + 2))
+    val order = Seq(SortOrder(tA, Ascending), SortOrder(tagA, Ascending))
+    val spec = WindowSpecDefinition(entA, order,
+      SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))
+    val fill = Alias(WindowExpression(
+      Last(fvA, ignoreNulls = true).toAggregateExpression(), spec), "__g_fill_fv")()
+    (Filter(EqualTo(tagA, Literal(1)), Window(Seq(fill), entA, order, union)), fill.toAttribute)
   }
 }

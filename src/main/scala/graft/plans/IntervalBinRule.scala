@@ -14,11 +14,11 @@ import org.apache.spark.sql.types.LongType
   *
   * into the engine's binned equi-join: both sides explode into
   * fixed-width coordinate bins, the join becomes an equi-join on
-  * (entity, bin), and a pair is emitted ONLY in its intersection-start
-  * bin — exactly-once, no dedup. The same [[rewrite]] builds the
-  * operator API's ops.IntervalJoin.binnedJoin, so SQL and API run one
-  * binned plan. Registered via [[graft.functions.GraftExtensions]],
-  * so AD-HOC SQL (including the DuckDB oracle queries themselves) takes
+  * (entity, bin), and a pair is emitted ONLY in one bin of its two bin
+  * ranges' intersection — exactly-once, no dedup (proof at [[binned]]).
+  * The same [[rewrite]] builds the operator API's
+  * ops.IntervalJoin.binnedJoin, so SQL and API run one binned plan.
+  * Registered via [[graft.functions.GraftExtensions]], so AD-HOC SQL (including the DuckDB oracle queries themselves) takes
   * the engine's physical path instead of Spark's default for this
   * pattern: a SortMergeJoin on `entity` alone with the range predicates
   * as a post-join filter — per-entity |a|x|b| pair work, the q35/q36
@@ -91,15 +91,12 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  /** child + Generate(explode(sequence(s div B, (e-1) div B))) -> bin attr. */
-  private def withBins(child: LogicalPlan, s: Expression, e: Expression, b: Literal)
+  /** child + Generate(explode(sequence(from, to))) -> bin attr. */
+  private def withBins(child: LogicalPlan, from: Expression, to: Expression)
       : (LogicalPlan, Attribute) = {
     // Sequence is TimeZoneAwareExpression: without an explicit zone the
     // node stays unresolved and the optimizer rejects the rewritten plan
-    val seq = new Sequence(
-      IntegralDivide(toLong(s), b),
-      IntegralDivide(Subtract(toLong(e), Literal(1L, LongType)), b))
-      .withTimeZone(conf.sessionLocalTimeZone)
+    val seq = new Sequence(from, to).withTimeZone(conf.sessionLocalTimeZone)
     // explode over a sequence of longs never yields a null: a nullable
     // attribute would only add isnotnull(bin) filters under the join
     val binAttr = AttributeReference("__graft_bin", LongType, nullable = false)()
@@ -176,7 +173,7 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     case Join(l, r, Inner, Some(cond), hint) =>
       lazy val bin = {
         val w = width
-        // the emit-once proofs need a positive width; 0 divides by zero
+        // the emit-once proof needs a positive width; 0 divides by zero
         require(w > 0, s"spark.graft.intervalBin.size must be positive, got $w")
         Literal(w, LongType)
       }
@@ -195,28 +192,15 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
       val greater = ranges.collectFirst {
         case (c, (a, b, isLess)) if !isLess => (c, a, b) }
       (less, greater) match {
-        case (Some((cLess, lStart, rEnd)), Some((cGreater, lEnd, rStart)))
-            if eqs.nonEmpty && cLess != cGreater =>
-          // a.start < b.end AND a.end > b.start with an entity equality:
-          // the overlap pattern. Bin both sides on their own (start, end).
-          val (lGen, lBin) = withBins(l, lStart, lEnd, bin)
-          val (rGen, rBin) = withBins(r, rStart, rEnd, bin)
-          val emitOnce = EqualTo(
-            IntegralDivide(Greatest(Seq(toLong(lStart), toLong(rStart))), bin), lBin)
-          val newCond = (eqs :+ EqualTo(lBin, rBin)) ++
-            conjuncts.filterNot(eqs.contains) :+ emitOnce
-          logInfo(s"graft: rewrote interval theta join to (entity, bin) equi-join " +
-            s"(bin=${bin.value}, ${eqs.length} entity key(s))")
-          Project(j.output, Join(lGen, rGen, Inner,
-            Some(newCond.reduce(And)), shuffleMerge(hint)))
-        case _ if eqs.nonEmpty =>
+        case _ if eqs.isEmpty => j
+        case (Some((cLess, lStart, rEnd)), Some((cGreater, lEnd, rStart))) if cLess != cGreater =>
+          // a.start < b.end AND a.end > b.start: the overlap pattern
+          binned(j, conjuncts, eqs, bin, (lStart, lEnd), (rStart, rEnd))
+        case _ =>
           containment(conjuncts, l, r) match {
-            case Some((iLo, iHi, oLo, oHi, innerIsLeft)) =>
-              rewriteContainment(j, l, r, hint, bin, conjuncts, eqs,
-                iLo, iHi, oLo, oHi, innerIsLeft)
+            case Some((lSpan, rSpan)) => binned(j, conjuncts, eqs, bin, lSpan, rSpan)
             case None => j
           }
-        case _ => j
       }
     case _ => j
   }
@@ -229,47 +213,46 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     * with the two inner expressions on one side of the join and the two
     * outer expressions on the other (either side may be the inner one —
     * `p contained-in f` and `f contains p` are the same shape with roles
-    * swapped). Returns (innerLo, innerHi, outerLo, outerHi, innerIsLeft).
+    * swapped). Returns the left side's (lo, hi) and the right side's.
     */
   private def containment(conjuncts: Seq[Expression], l: LogicalPlan, r: LogicalPlan)
-      : Option[(Expression, Expression, Expression, Expression, Boolean)] = {
+      : Option[((Expression, Expression), (Expression, Expression))] = {
     val ges = conjuncts.flatMap(c => normalizeGe(c, l, r).map(n => (c, n)))
     (for {
       (c1, (iLo, oLo, s1)) <- ges.view  // c1: inner.lo >= outer.lo (big on s1)
       (c2, (oHi, iHi, s2)) <- ges.view  // c2: outer.hi >= inner.hi (big on s2)
       if (c1 ne c2) && s1 != s2
-    } yield (iLo, iHi, oLo, oHi, s1)).headOption
+    } yield if (s1) ((iLo, iHi), (oLo, oHi)) else ((oLo, oHi), (iLo, iHi))).headOption
   }
 
-  /** Containment -> ONE binned equi-join, exactly-once for EVERY row
-    * shape, degenerate intervals included — no residue branch.
+  /** The binned equi-join of `j`'s two sides, each with its (lo, hi)
+    * coordinates: both explode over `sequence(lo div B, (hi-1) div B)`,
+    * the join keeps the entity equalities `eqs` plus bin equality plus
+    * every original conjunct, and a pair is emitted only in the bin
+    * `greatest(lower(L), lower(R))`, where lower(X) = least(lo div B,
+    * (hi-1) div B) is the low end of X's bin range.
     *
-    * Each side explodes over `sequence(lo div B, (hi-1) div B)`. Spark's
-    * `sequence(a, b)` steps DOWNWARD when a > b, so the bins emitted are
-    * always the contiguous range [min(loB, hi1B), max(loB, hi1B)] (where
-    * xB = x div B, hi1B = (hi-1) div B), each bin exactly once — for a
-    * well-formed interval (lo < hi) that is the ascending [loB, hi1B]; for
-    * a degenerate one (lo >= hi: empty/inverted) it is the reversed span.
+    * EXACTLY ONCE, for every row shape. Spark's `sequence(a, b)` steps
+    * DOWNWARD when a > b, so a side emits each bin of the contiguous range
+    * [lower(X), upper(X)] exactly once, with upper(X) = max(lo div B,
+    * (hi-1) div B) — ascending for a well-formed interval (lo < hi), the
+    * reversed span for an empty or inverted one. Both patterns bound each
+    * side's lower end by the other side's upper end (truncating `div` is
+    * monotone for B > 0):
+    *   - overlap (lo_l < hi_r, lo_r < hi_l): lower(L) <= lo_l div B <=
+    *     (hi_r-1) div B <= upper(R), and symmetrically for R;
+    *   - containment (inner.lo >= outer.lo, inner.hi <= outer.hi):
+    *     lower(I) <= (hi_i-1) div B <= (hi_o-1) div B <= upper(O), and
+    *     lower(O) <= lo_o div B <= lo_i div B <= upper(I).
+    * So the two ranges intersect, and the greater of their low ends lies
+    * in both ([a1,b1] and [a2,b2] with a1<=b2 and a2<=b1 share max(a1,a2)):
+    * the bin equality meets it for exactly one (bin_l, bin_r). Candidate
+    * pairs the predicate rejects fail the kept conjuncts, and a null
+    * coordinate emits no bins (Generate, outer=false), matching the theta
+    * join where a null comparison is never true. For well-formed overlap
+    * pairs the emit bin is the familiar greatest(starts) div B.
     *
-    * EXACTLY-ONCE emit bin: a pair is emitted only where the inner side's
-    * bin equals `greatest(innerLower, outerLower)` with
-    * innerLower = least(iLoB, iHi1B), outerLower = least(oLoB, oHi1B) —
-    * the lower end of the bin-range INTERSECTION. It lies in BOTH ranges
-    * for every pair satisfying the raw predicates: from iLo >= oLo and
-    * iHi <= oHi,
-    *   - inner's upper end max(iLoB, iHi1B) >= iLoB >= oLoB >= outerLower,
-    *   - outer's upper end max(oLoB, oHi1B) >= oHi1B >= iHi1B >= innerLower,
-    * so the two ranges overlap and the greatest of their lower ends is in
-    * both ([a1,b1] and [a2,b2] with a1<=b2 and a2<=b1 share max(a1,a2)).
-    * For the normal well-formed case this reduces to the familiar
-    * intersection-start bin `iLo div B` (iLo >= oLo makes it the max).
-    * Both sequences are duplicate-free, so at most one (iBin, oBin)
-    * combination satisfies it: exactly-once, no dedup. The original
-    * conjuncts are preserved, so candidate pairs never produce false rows;
-    * null coordinates emit no bins (Generate, outer=false), matching the
-    * theta join where a null comparison is never true.
-    *
-    * WHY not a residue branch for degenerate rows (the first round-5
+    * WHY one join and no residue branch for degenerate rows (an earlier
     * design): its `__graft_nobin` guard column was referenced by nothing,
     * so ColumnPruning stripped it each optimizer iteration and this rule
     * re-matched its own residue to fixed point — q55's physical plan grew
@@ -280,28 +263,21 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     *
     * Scale note: a degenerate interval's reversed span explodes into
     * |lo - hi| / B bins — the same hazard class as an extreme well-formed
-    * span in the overlap rewrite, inherent to fixed-width binning.
+    * span, inherent to fixed-width binning.
     */
-  private def rewriteContainment(j: Join, l: LogicalPlan, r: LogicalPlan,
-      hint: JoinHint, b: Literal, conjuncts: Seq[Expression],
-      eqs: Seq[Expression], iLo: Expression, iHi: Expression,
-      oLo: Expression, oHi: Expression, innerIsLeft: Boolean): LogicalPlan = {
-    val inner = if (innerIsLeft) l else r
-    val (iGen, iBin) = withBins(inner, iLo, iHi, b)
-    val (oGen, oBin) = withBins(if (innerIsLeft) r else l, oLo, oHi, b)
-    def binOf(e: Expression) = IntegralDivide(toLong(e), b)
-    def binOfHi(e: Expression) =
-      IntegralDivide(Subtract(toLong(e), Literal(1L, LongType)), b)
-    val innerLower = Least(Seq(binOf(iLo), binOfHi(iHi)))
-    val outerLower = Least(Seq(binOf(oLo), binOfHi(oHi)))
-    val emitOnce = EqualTo(Greatest(Seq(innerLower, outerLower)), iBin)
-    val newCond = (eqs :+ EqualTo(iBin, oBin)) ++
-      conjuncts.filterNot(eqs.contains) :+ emitOnce
-    val binned =
-      if (innerIsLeft) Join(iGen, oGen, Inner, Some(newCond.reduce(And)), shuffleMerge(hint))
-      else Join(oGen, iGen, Inner, Some(newCond.reduce(And)), shuffleMerge(hint))
-    logInfo(s"graft: rewrote containment theta join to (entity, bin) equi-join " +
-      s"(bin=${b.value}, ${eqs.length} entity key(s), inner=${if (innerIsLeft) "left" else "right"})")
-    Project(j.output, binned)
+  private def binned(j: Join, conjuncts: Seq[Expression], eqs: Seq[Expression], b: Literal,
+      lSpan: (Expression, Expression), rSpan: (Expression, Expression)): LogicalPlan = {
+    // (lo div B, (hi-1) div B): a side's first and last bin
+    def ends(span: (Expression, Expression)) = (IntegralDivide(toLong(span._1), b),
+      IntegralDivide(Subtract(toLong(span._2), Literal(1L, LongType)), b))
+    val (l0, l1) = ends(lSpan)
+    val (r0, r1) = ends(rSpan)
+    val (lGen, lBin) = withBins(j.left, l0, l1)
+    val (rGen, rBin) = withBins(j.right, r0, r1)
+    val emitOnce = EqualTo(Greatest(Seq(Least(Seq(l0, l1)), Least(Seq(r0, r1)))), lBin)
+    val newCond = (eqs :+ EqualTo(lBin, rBin)) ++ conjuncts.filterNot(eqs.contains) :+ emitOnce
+    logInfo(s"graft: rewrote interval theta join to (entity, bin) equi-join " +
+      s"(bin=${b.value}, ${eqs.length} entity key(s))")
+    Project(j.output, Join(lGen, rGen, Inner, Some(newCond.reduce(And)), shuffleMerge(j.hint)))
   }
 }

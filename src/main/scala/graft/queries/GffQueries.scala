@@ -624,7 +624,7 @@ object GffQueries {
   // the strict-overlap theta shape re-planned; Contained/ContainsRegion
   // SQL still got SortMergeJoin-on-entity + filter, per-entity quadratic).
   // Same tables as q53, but the user types Contained-mode SQL (probe
-  // within feature, >=/<= conjuncts). IntervalBinRule.rewriteContainment
+  // within feature, >=/<= conjuncts). IntervalBinRule's containment pattern
   // re-plans it onto a single binned (entity, bin) shuffle-merge
   // equi-join whose emit-once bin covers degenerate intervals too;
   // asserted to fire.

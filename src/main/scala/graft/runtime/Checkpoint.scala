@@ -1,9 +1,9 @@
 package graft.runtime
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Resumable partitioned job runner: Iceberg-style per-partition commit
@@ -57,19 +57,22 @@ object Checkpoint {
   def isCommitted(outDir: String, bucket: String): Boolean =
     Files.exists(manifestPath(outDir, bucket))
 
-  private def writeAtomic(path: java.nio.file.Path, content: String): Unit = {
+  private def writeAtomic(path: java.nio.file.Path, content: Array[Byte]): Unit = {
     Files.createDirectories(path.getParent)
     val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, content)
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def json(m: PartitionManifest): String =
-    s"""{"bucket":"${m.bucket}","rows":${m.rows},"t_min":${m.tMin},"t_max":${m.tMax},
-       |"duration_sec":${m.durationSec},"rows_per_sec":${m.rowsPerSec},
-       |"plan_hash":"${m.planHash}","input_fingerprint":"${m.inputFingerprint}"}"""
-      .stripMargin.replace("\n", "")
+  private def json(m: PartitionManifest): Array[Byte] = {
+    val mapper = new ObjectMapper()
+    val o = mapper.createObjectNode()
+    o.put("bucket", m.bucket).put("rows", m.rows).put("t_min", m.tMin).put("t_max", m.tMax)
+      .put("duration_sec", m.durationSec).put("rows_per_sec", m.rowsPerSec)
+      .put("plan_hash", m.planHash).put("input_fingerprint", m.inputFingerprint)
+    mapper.writeValueAsBytes(o)
+  }
 
   /** Run `job` per bucket of `bucketCol`, committing each partition with a
     * manifest; skips already-committed buckets (resume). `timeCol` feeds

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.AsOfJoin
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -103,26 +104,19 @@ object StreamingFeatures {
           val outRows = new ArrayBuffer[AsOfOut]()
           val addT = new ArrayBuffer[Long]()
           val addV = new ArrayBuffer[Double]()
-          def lookup(t: Long): Int = {
-            // greatest i with merged time <= t; new adds are time-ordered and
-            // >= any probe processed after them within this batch, so a
-            // two-level search (adds first, then state) is exact
-            var lo = 0; var hi = ts.length - 1; var ans = -1
-            while (lo <= hi) {
-              val mid = (lo + hi) >>> 1
-              if (ts(mid) <= t) { ans = mid; lo = mid + 1 } else hi = mid - 1
-            }
-            ans
-          }
           evs.foreach { e =>
-            if (e.tag == 0) { addT += e.t; addV += e.value }
+            // a null entity never matches (AsOfJoin's rule): its features
+            // never enter state, its probes get the miss row
+            if (e.tag == 0) { if (entity != null) { addT += e.t; addV += e.value } }
             else {
               // best candidate = LATEST f_t <= t across the in-batch adds
               // (sorted; features at equal t sort before probes) AND the
-              // state history; at equal f_t the in-batch add wins (newest)
+              // state history; at equal f_t the in-batch add wins (newest).
+              // Adds are time-ordered and >= any probe processed after them
+              // within this batch, so the two-level search is exact.
               var ai = addT.length - 1
               while (ai >= 0 && addT(ai) > e.t) ai -= 1
-              val si = lookup(e.t)
+              val si = AsOfJoin.lastAtOrBefore(ts, e.t)
               if (ai >= 0 && (si < 0 || addT(ai) >= ts(si)))
                 outRows += AsOfOut(entity, e.t, e.probe_id, addT(ai), addV(ai))
               else if (si >= 0)

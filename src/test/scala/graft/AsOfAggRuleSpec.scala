@@ -35,13 +35,15 @@ class AsOfAggRuleSpec extends SparkSpec {
       |  ON p.entity = f.entity AND f.t <= p.t
       |GROUP BY p.probe_id""".stripMargin
 
+  // a threshold of -1 makes the rule's size guard hold on both sides
   private def withRule[T](body: => T): T = {
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ AsOfAggRule
-    spark.conf.set("spark.graft.asofAgg.force", "1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try body
     finally {
-      spark.conf.set("spark.graft.asofAgg.force", "0")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == AsOfAggRule)
     }

@@ -68,6 +68,35 @@ class AsOfJoinSpec extends SparkSpec {
     assert(jobs.isEmpty, s"a driver-local feature side decides and collects without a job: $jobs")
     assert(!df.queryExecution.executedPlan.toString.contains("Window"))
     assert(byEvent(df) == want)
+    // both paths return the probe's columns in its own order, then f_t, then the values
+    val cols = Seq("event_id", "entity", "t", "f_t", "v")
+    assert(AsOfJoin.windowed(p, feats).columns.toSeq == cols)
+    assert(df.columns.toSeq == cols)
+  }
+
+  test("a null entity or a null time never matches, on both paths") {
+    val f = Seq[(String, java.lang.Long, Long)](("u", 10L, 1L), ("u", null, 2L),
+      (null, 5L, 3L), ("w", 50L, 4L)).toDF("entity", "t", "v")
+    val p = Seq[(Long, String, java.lang.Long)]((1L, "u", 20L), (2L, null, 20L),
+      (3L, "u", null), (4L, "w", 7L), (5L, "u", 8L)).toDF("probe_id", "entity", "t")
+    // brute force under SQL equality: a null never equals or orders
+    val fl = f.as[(Option[String], Option[Long], Long)].collect()
+    val want = p.as[(Long, Option[String], Option[Long])].collect().map { case (pid, e, t) =>
+      val cand = fl.collect { case (Some(fe), Some(ft), v)
+        if e.contains(fe) && t.exists(ft <= _) => (ft, v) }
+      val best = cand.maxByOption(_._1)
+      pid -> (best.map(_._1), best.map(_._2))
+    }.toMap
+    assert(want == Map(1L -> (Some(10L), Some(1L))) ++ (2L to 5L).map(_ -> (None, None)))
+    // f_t and v read separately: a miss must null both
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.select("probe_id", "f_t", "v").as[(Long, Option[Long], Option[Long])].collect()
+        .map { case (pid, ft, v) => pid -> (ft, v) }.toMap
+    assert(got(AsOfJoin.windowed(p, f)) == want)
+    val (df, jobs, _) = jobsOf(AsOfJoin.join(p, f))
+    assert(jobs.isEmpty, s"a driver-local feature side decides and collects without a job: $jobs")
+    assert(!df.queryExecution.executedPlan.toString.contains("Window"))
+    assert(got(df) == want)
   }
 
   test("equal timestamps are visible (t'=t counts, zero leakage beyond)") {

@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.runtime.Checkpoint
 
 import java.nio.file.{Files, Paths}
@@ -55,8 +56,9 @@ class CheckpointSpec extends SparkSpec {
   test("bucket values needing partition-path escaping round-trip (ADVICE r3)") {
     // ':' '/' '%' are escaped by Spark's partition writer; the stats
     // read-back and readCommitted must build the SAME escaped dir names,
-    // or these buckets silently record rows=0 despite data landing
-    val odd = Seq("a:b", "p/q", "100%")
+    // or these buckets silently record rows=0 despite data landing.
+    // '"' and '\' must also survive in the JSON manifest.
+    val odd = Seq("a:b", "p/q", "100%", "a\"b", "c\\d")
     val d2 = odd.zipWithIndex.flatMap { case (b, i) =>
       (0 until 10).map(j => (b, (i * 10 + j).toLong, j.toLong))
     }.toDF("bucket", "t", "v")
@@ -65,7 +67,10 @@ class CheckpointSpec extends SparkSpec {
     assert(r.written.map(_.bucket).toSet == odd.toSet)
     assert(r.written.forall(_.rows == 10),
       s"stats must resolve escaped partition dirs: ${r.written.map(m => m.bucket -> m.rows)}")
-    assert(Checkpoint.readCommitted(spark, dir, "bucket", odd).count() == 30)
+    assert(Checkpoint.readCommitted(spark, dir, "bucket", odd).count() == 50)
+    val manifests = Files.list(Paths.get(s"$dir/_manifests")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+    assert(manifests.map(m => new ObjectMapper().readTree(Files.readAllBytes(m)).get("bucket").asText)
+      .toSet == odd.toSet, "every manifest parses as JSON and reads its bucket back")
     val r2 = Checkpoint.runPartitioned(d2, "bucket", odd, dir, "t")
     assert(r2.skipped.toSet == odd.toSet, "escaped buckets must be seen as committed on resume")
   }

@@ -2,10 +2,7 @@ package graft.index
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.ops.{BroadcastSide, Closure}
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -210,8 +207,8 @@ object IndexBuild {
     * `features` is computed once: unless the caller has cached it, it is
     * persisted for the duration of the write, written first, and the four
     * derived tables are then written through that cache, in parallel
-    * (guide §2.6 "overlap independent jobs"). Row counts come from the
-    * footers of the written parquet files, read on the driver. The manifest
+    * (guide §2.6 "overlap independent jobs"). Each table's row count is
+    * observed by its own write, as the rows enter the writer. The manifest
     * is written last, so a failed write leaves none.
     *
     * Waits at most an hour in all. On the first failure or the timeout,
@@ -222,8 +219,7 @@ object IndexBuild {
 
   /** [[write]] with its time bound. */
   private[graft] def write(t: IndexTables, dir: String, timeout: FiniteDuration): Unit = {
-    val spark = t.features.sparkSession
-    val sc = spark.sparkContext
+    val sc = t.features.sparkSession.sparkContext
     val deadline = timeout.fromNow
     val manifest = Paths.get(s"$dir/manifest.json")
     Files.deleteIfExists(manifest)
@@ -232,21 +228,23 @@ object IndexBuild {
     val group = s"graft-index-write-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(t.named.length - 1)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    var started = Seq.empty[Future[Unit]]
-    // waits for every table of the batch; fails at the first failure
-    def writeAll(batch: Seq[(String, DataFrame)]): Unit = {
+    var started = Seq.empty[Future[Long]]
+    // waits for every table of the batch and returns its row counts;
+    // fails at the first failure
+    def writeAll(batch: Seq[(String, DataFrame)]): Seq[Long] = {
       val fs = batch.map { case (name, df) =>
         Future {
           sc.setJobGroup(group, s"index write: $name", interruptOnCancel = true)
-          df.write.mode("overwrite").parquet(s"$dir/$name")
+          val obs = Observation()
+          df.observe(obs, count(lit(1)).as("rows")).write.mode("overwrite").parquet(s"$dir/$name")
+          Await.result(obs.future, deadline.timeLeft).getLong(0)
         }
       }
       started ++= fs
       Await.result(Future.sequence(fs), deadline.timeLeft)
     }
-    try {
-      writeAll(t.named.take(1))
-      writeAll(t.named.drop(1))
+    val rows = try {
+      writeAll(t.named.take(1)) ++ writeAll(t.named.drop(1))
     } catch {
       case e: Throwable =>
         sc.cancelJobGroupAndFutureJobs(group)
@@ -259,26 +257,14 @@ object IndexBuild {
     }
     val mapper = new ObjectMapper()
     val json = mapper.createObjectNode()
-    for ((name, df) <- t.named) {
+    for (((name, df), n) <- t.named.zip(rows)) {
       val entry = json.putObject(name)
-      entry.put("rows", footerRows(spark, s"$dir/$name"))
+      entry.put("rows", n)
       // parquet stores every column as nullable; record what a read infers
       val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
       entry.set[JsonNode]("schema", mapper.readTree(schema.json))
     }
     Files.write(manifest, mapper.writeValueAsBytes(json))
-  }
-
-  /** Rows in the parquet files under `dir`, summed from their footers. */
-  private def footerRows(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    path.getFileSystem(conf).listStatus(path)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
-        try reader.getRecordCount finally reader.close()
-      }.sum
   }
 
   /** Open an index written by [[write]], with the schemas its manifest

@@ -71,9 +71,7 @@ object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
       }
       unwrapped match {
         case Some((j @ Join(l, r, Inner, Some(cond), _), subst))
-            if j.resolved &&
-              l.stats.sizeInBytes > conf.autoBroadcastJoinThreshold &&
-              r.stats.sizeInBytes > conf.autoBroadcastJoinThreshold =>
+            if j.resolved && beyondBroadcast(l, r) =>
           def sub(e: Expression): Expression = e.transformUp {
             case a: Attribute if subst.contains(a) => subst(a)
           }
@@ -89,28 +87,17 @@ object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
       r: LogicalPlan, cond: Expression): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
     // entity equalities, and exactly one non-strict range conjunct
-    val eqs = conjuncts.collect {
-      case e @ EqualTo(a, b) => (e, sideOf(a, l, r), sideOf(b, l, r), a, b)
-    }.collect { case (e, Some(x), Some(y), a, b) if x != y =>
-      if (x) (e: Expression, a, b) else (e, b, a) // (conjunct, leftExpr, rightExpr)
-    }
-    val ranges = conjuncts.collect {
-      case c @ LessThanOrEqual(a, b) => (c: Expression, a, b)
-      case c @ GreaterThanOrEqual(a, b) => (c: Expression, b, a)
-    }.filter { case (_, small, big) =>
-      isCoord(small) && isCoord(big) &&
-        (for (x <- sideOf(small, l, r); y <- sideOf(big, l, r)) yield x != y)
-          .getOrElse(false)
-    }
-    if (eqs.isEmpty || ranges.length != 1 ||
+    val eqs = conjuncts.flatMap(equality(_, l, r)) // (leftExpr, rightExpr)
+    val ranges = conjuncts.flatMap(comparison(_, l, r))
+    if (eqs.isEmpty || ranges.length != 1 || ranges.head.strict ||
       conjuncts.length != eqs.length + 1) return None
-    val (rangeC, fT, pT) = ranges.head
-    val probeIsLeft = sideOf(pT, l, r).get
+    val Comparison(fT, pT, featIsLeft, _) = ranges.head
+    val probeIsLeft = !featIsLeft
     val (probe, feat) = if (probeIsLeft) (l, r) else (r, l)
     // every group key on the probe side only
     if (!groupExprs.forall(_.references.subsetOf(probe.outputSet))) return None
     // orient each equality as (probe side, feature side)
-    val entPairs = eqs.map { case (_, le, re) =>
+    val entPairs = eqs.map { case (le, re) =>
       if (probeIsLeft) (le, re) else (re, le)
     }
     if (!entPairs.forall { case (pe, fe) =>
@@ -120,7 +107,6 @@ object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
     // pure group expressions; anything else vetoes the rewrite
     val maxByVals = scala.collection.mutable.ArrayBuffer[Expression]()
     sealed trait Kind
-    case object GroupOnly extends Kind
     final case class FillMaxBy(idx: Int) extends Kind
     case object FillMaxT extends Kind
     val kinds: Seq[Option[(NamedExpression, Map[Expression, Kind])]] =
@@ -165,7 +151,6 @@ object AsOfAggRule extends Rule[LogicalPlan] with PredicateHelper {
             case FillMaxBy(i) =>
               MaxBy(fillV(i), fillT).toAggregateExpression()
             case FillMaxT => Max(fillT).toAggregateExpression()
-            case GroupOnly => ae
           }
       }.asInstanceOf[NamedExpression]
     }

@@ -58,39 +58,6 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def toLong(e: Expression): Expression =
     if (e.dataType == LongType) e else Cast(e, LongType)
 
-  /** Normalized strict inequality: (leftSideExpr, rightSideExpr, leftIsLess). */
-  private def normalize(c: Expression, l: LogicalPlan, r: LogicalPlan)
-      : Option[(Expression, Expression, Boolean)] = c match {
-    case LessThan(a, b) => (sideOf(a, l, r), sideOf(b, l, r)) match {
-      case (Some(true), Some(false)) if isCoord(a) && isCoord(b) => Some((a, b, true))
-      case (Some(false), Some(true)) if isCoord(a) && isCoord(b) => Some((b, a, false))
-      case _ => None
-    }
-    case GreaterThan(a, b) => (sideOf(a, l, r), sideOf(b, l, r)) match {
-      case (Some(true), Some(false)) if isCoord(a) && isCoord(b) => Some((a, b, false))
-      case (Some(false), Some(true)) if isCoord(a) && isCoord(b) => Some((b, a, true))
-      case _ => None
-    }
-    case _ => None
-  }
-
-  /** Normalized NON-STRICT inequality `big >= small` with each expression
-    * entirely on one side: (bigExpr, smallExpr, bigIsLeft). Feeds the
-    * containment pattern (Contained / ContainsRegion-shaped SQL).
-    */
-  private def normalizeGe(c: Expression, l: LogicalPlan, r: LogicalPlan)
-      : Option[(Expression, Expression, Boolean)] = c match {
-    case GreaterThanOrEqual(a, b) => (sideOf(a, l, r), sideOf(b, l, r)) match {
-      case (Some(x), Some(y)) if x != y && isCoord(a) && isCoord(b) => Some((a, b, x))
-      case _ => None
-    }
-    case LessThanOrEqual(a, b) => (sideOf(a, l, r), sideOf(b, l, r)) match {
-      case (Some(x), Some(y)) if x != y && isCoord(a) && isCoord(b) => Some((b, a, y))
-      case _ => None
-    }
-    case _ => None
-  }
-
   /** child + Generate(explode(sequence(from, to))) -> bin attr. */
   private def withBins(child: LogicalPlan, from: Expression, to: Expression)
       : (LogicalPlan, Attribute) = {
@@ -157,9 +124,7 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     plan.transformUp {
       case j @ Join(l, r, Inner, Some(_), _)
           if j.resolved &&
-            (forced ||
-              (l.stats.sizeInBytes > conf.autoBroadcastJoinThreshold &&
-                r.stats.sizeInBytes > conf.autoBroadcastJoinThreshold)) &&
+            (forced || beyondBroadcast(l, r)) &&
             !marker(l) && !marker(r) => // already rewritten
         rewrite(j, width)
     }
@@ -178,26 +143,16 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
         Literal(w, LongType)
       }
       val conjuncts = splitConjunctivePredicates(cond)
-      val eqs = conjuncts.filter {
-        case EqualTo(a, b) => (sideOf(a, l, r), sideOf(b, l, r)) match {
-          case (Some(x), Some(y)) => x != y
-          case _ => false
-        }
-        case _ => false
-      }
-      val ranges: Seq[(Expression, (Expression, Expression, Boolean))] =
-        conjuncts.flatMap(c => normalize(c, l, r).map(n => (c, n)))
-      val less = ranges.collectFirst {
-        case (c, (a, b, isLess)) if isLess => (c, a, b) }
-      val greater = ranges.collectFirst {
-        case (c, (a, b, isLess)) if !isLess => (c, a, b) }
-      (less, greater) match {
+      val eqs = conjuncts.filter(equality(_, l, r).isDefined)
+      val (strict, loose) = conjuncts.flatMap(comparison(_, l, r)).partition(_.strict)
+      // the overlap pattern: two strict comparisons facing opposite
+      // sides, the first of each in conjunct order
+      (strict.find(_.smallIsLeft), strict.find(!_.smallIsLeft)) match {
         case _ if eqs.isEmpty => j
-        case (Some((cLess, lStart, rEnd)), Some((cGreater, lEnd, rStart))) if cLess != cGreater =>
-          // a.start < b.end AND a.end > b.start: the overlap pattern
-          binned(j, conjuncts, eqs, bin, (lStart, lEnd), (rStart, rEnd))
+        case (Some(lr), Some(rl)) => // lr: lStart < rEnd, rl: rStart < lEnd
+          binned(j, conjuncts, eqs, bin, (lr.small, rl.big), (rl.small, lr.big))
         case _ =>
-          containment(conjuncts, l, r) match {
+          containment(loose) match {
             case Some((lSpan, rSpan)) => binned(j, conjuncts, eqs, bin, lSpan, rSpan)
             case None => j
           }
@@ -206,24 +161,25 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Detect the CONTAINMENT pattern (VERDICT r4 #5 — Contained /
-    * ContainsRegion-shaped SQL): two non-strict conjuncts
+    * ContainsRegion-shaped SQL) among the non-strict comparisons `loose`:
     *
-    *   inner.lo >= outer.lo  AND  inner.hi <= outer.hi
+    *   outer.lo <= inner.lo  AND  inner.hi <= outer.hi
     *
     * with the two inner expressions on one side of the join and the two
     * outer expressions on the other (either side may be the inner one —
     * `p contained-in f` and `f contains p` are the same shape with roles
     * swapped). Returns the left side's (lo, hi) and the right side's.
     */
-  private def containment(conjuncts: Seq[Expression], l: LogicalPlan, r: LogicalPlan)
-      : Option[((Expression, Expression), (Expression, Expression))] = {
-    val ges = conjuncts.flatMap(c => normalizeGe(c, l, r).map(n => (c, n)))
+  private def containment(loose: Seq[Comparison])
+      : Option[((Expression, Expression), (Expression, Expression))] =
     (for {
-      (c1, (iLo, oLo, s1)) <- ges.view  // c1: inner.lo >= outer.lo (big on s1)
-      (c2, (oHi, iHi, s2)) <- ges.view  // c2: outer.hi >= inner.hi (big on s2)
-      if (c1 ne c2) && s1 != s2
-    } yield if (s1) ((iLo, iHi), (oLo, oHi)) else ((oLo, oHi), (iLo, iHi))).headOption
-  }
+      lo <- loose.view  // outer.lo <= inner.lo
+      hi <- loose.view  // inner.hi <= outer.hi, inner on lo's big side
+      if lo.smallIsLeft != hi.smallIsLeft
+    } yield {
+      val (inner, outer) = ((lo.big, hi.small), (lo.small, hi.big))
+      if (lo.smallIsLeft) (outer, inner) else (inner, outer)
+    }).headOption
 
   /** The binned equi-join of `j`'s two sides, each with its (lo, hi)
     * coordinates: both explode over `sequence(lo div B, (hi-1) div B)`,

@@ -202,8 +202,8 @@ object EventQueries {
        |FROM s""".stripMargin
 
   // q41 — checkpointed partitioned-run round-trip: runPartitioned commits
-  // every bucket (one write job + one stats job over the input, atomic
-  // per-bucket manifests), readCommitted reads the committed partitions
+  // every bucket (one write job over the input whose observed stats fill
+  // atomic per-bucket manifests), readCommitted reads the committed partitions
   // back, and the per-bucket aggregate must equal a direct GROUP BY over
   // the source — proof the resumable commit protocol writes exactly the
   // input, end to end. Buckets carry a 'b' prefix so the partition-dir

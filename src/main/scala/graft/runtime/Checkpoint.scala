@@ -1,10 +1,12 @@
 package graft.runtime
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Resumable partitioned job runner: Iceberg-style per-partition commit
   * protocol over plain parquet (no Iceberg jar ships in /opt/spark/jars —
@@ -74,9 +76,23 @@ object Checkpoint {
     mapper.writeValueAsBytes(o)
   }
 
+  /** How long [[runPartitioned]] waits, once its write has returned, for
+    * the write's observed statistics to be delivered. */
+  private val StatsTimeout = 1.minute
+
   /** Run `job` per bucket of `bucketCol`, committing each partition with a
     * manifest; skips already-committed buckets (resume). `timeCol` feeds
     * the manifest's min/max lineage stats.
+    *
+    * The input plan is computed exactly once, by one partitioned write of
+    * every pending bucket (dynamic partition overwrite leaves committed
+    * partition directories untouched). The manifest statistics are
+    * counted as the rows enter the writer: an `Observation` directly
+    * above the write computes, per pending bucket, its rows and the min
+    * and max of its non-null times (0 where there are none). Manifests
+    * commit atomically after the data lands, so a crash, or an
+    * observation that does not arrive in time, leaves no manifest and a
+    * rerun converges.
     */
   def runPartitioned(
       df: DataFrame,
@@ -89,42 +105,26 @@ object Checkpoint {
     val (pending, skipped) =
       buckets.partition(b => !isCommitted(outDir, b))
     if (pending.isEmpty) return RunReport(Nil, skipped)
-    val part = df.where(col(bucketCol).isin(pending: _*))
+    val bucket = col(bucketCol).cast("string")
+    val stats = pending.zipWithIndex.flatMap { case (b, i) =>
+      val in = bucket === lit(b)
+      Seq(count_if(in).as(s"rows$i"), min(when(in, col(timeCol))).as(s"tMin$i"),
+        max(when(in, col(timeCol))).as(s"tMax$i"))
+    }
+    val obs = Observation()
     val t0 = System.nanoTime()
-    // The INPUT plan is computed exactly ONCE (round 1 ran a write job +
-    // an agg job PER bucket — 2N full computations; round 2 still
-    // recomputed the whole upstream plan a second time for the stats):
-    //  1. one partitioned write of every pending bucket; dynamic partition
-    //     overwrite leaves already-committed partition dirs untouched;
-    //  2. one grouped stats pass over the JUST-WRITTEN parquet — a
-    //     column-pruned scan of (bucketCol partition value, timeCol) from
-    //     fresh footers, not a re-run of the upstream pipeline. Reading
-    //     back what landed also makes the manifest stats lineage of the
-    //     OUTPUT, which is what a resume check wants to trust.
-    // Manifests still commit atomically AFTER the data lands, so a crash
-    // between the two leaves no manifest and the rerun converges.
-    part.write.mode("overwrite")
+    df.where(col(bucketCol).isin(pending: _*))
+      .observe(obs, stats.head, stats.tail: _*)
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(bucketCol)
       .parquet(outDir)
-    val spark = df.sparkSession
-    val writtenPaths = pending.map(b => s"$outDir/${partitionDirName(bucketCol, b)}")
-      .filter(p => new java.io.File(p).exists) // zero-row buckets write no dir
-    val stats =
-      if (writtenPaths.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
-      else spark.read.option("basePath", outDir).parquet(writtenPaths: _*)
-        .groupBy(col(bucketCol).cast("string").as("__b"))
-        .agg(count(lit(1)), min(col(timeCol)), max(col(timeCol)))
-        .collect().map(r => r.getString(0) -> r).toMap
+    val row = Await.result(obs.future, StatsTimeout)
     val dt = (System.nanoTime() - t0) / 1e9
-    val manifests = pending.map { b =>
-      val (rows, tMin, tMax) = stats.get(b) match {
-        case Some(r) => (r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2),
-          if (r.isNullAt(3)) 0L else r.getLong(3))
-        case None => (0L, 0L, 0L) // pending bucket with zero input rows
-      }
-      val m = PartitionManifest(b, rows, tMin, tMax,
+    val manifests = pending.zipWithIndex.map { case (b, i) =>
+      def orZero(j: Int) = if (row.isNullAt(j)) 0L else row.getLong(j)
+      val rows = row.getLong(3 * i)
+      val m = PartitionManifest(b, rows, orZero(3 * i + 1), orZero(3 * i + 2),
         dt, if (dt > 0) rows / dt else 0.0, planHash, inputFingerprint)
       writeAtomic(manifestPath(outDir, b), json(m))
       m

@@ -5,16 +5,15 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Tagged event for the streaming as-of merge: tag 0 = feature update,
   * tag 1 = probe. Nullable payloads depend on the tag.
   */
 final case class AsOfEvent(entity: String, t: Long, tag: Int,
     probe_id: java.lang.Long, value: java.lang.Double)
 
-/** Per-entity state: time-sorted feature history (parallel arrays). */
-final case class AsOfHistory(ts: Array[Long], vs: Array[Double])
+/** Per-entity state: time-sorted feature history (parallel arrays); a
+  * null value stays null. */
+final case class AsOfHistory(ts: Array[Long], vs: Array[java.lang.Double])
 
 final case class AsOfOut(entity: String, t: Long, probe_id: Long,
     f_t: java.lang.Long, value: java.lang.Double)
@@ -99,38 +98,24 @@ object StreamingFeatures {
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (entity: String, it: Iterator[AsOfEvent], state: GroupState[AsOfHistory]) =>
           val evs = it.toArray.sortBy(e => (e.t, e.tag, Option(e.probe_id).map(_.toLong).getOrElse(0L)))
-          var ts = state.getOption.map(_.ts).getOrElse(Array.empty[Long])
-          var vs = state.getOption.map(_.vs).getOrElse(Array.empty[Double])
-          val outRows = new ArrayBuffer[AsOfOut]()
-          val addT = new ArrayBuffer[Long]()
-          val addV = new ArrayBuffer[Double]()
-          evs.foreach { e =>
-            // a null entity never matches (AsOfJoin's rule): its features
-            // never enter state, its probes get the miss row
-            if (e.tag == 0) { if (entity != null) { addT += e.t; addV += e.value } }
-            else {
-              // best candidate = LATEST f_t <= t across the in-batch adds
-              // (sorted; features at equal t sort before probes) AND the
-              // state history; at equal f_t the in-batch add wins (newest).
-              // Adds are time-ordered and >= any probe processed after them
-              // within this batch, so the two-level search is exact.
-              var ai = addT.length - 1
-              while (ai >= 0 && addT(ai) > e.t) ai -= 1
-              val si = AsOfJoin.lastAtOrBefore(ts, e.t)
-              if (ai >= 0 && (si < 0 || addT(ai) >= ts(si)))
-                outRows += AsOfOut(entity, e.t, e.probe_id, addT(ai), addV(ai))
-              else if (si >= 0)
-                outRows += AsOfOut(entity, e.t, e.probe_id, ts(si), vs(si))
-              else outRows += AsOfOut(entity, e.t, e.probe_id, null, null)
-            }
+          val prev = state.getOption.map(h => h.ts.zip(h.vs)).getOrElse(Array.empty[(Long, java.lang.Double)])
+          // a null entity never matches (AsOfJoin's rule): its features
+          // never enter state, its probes get the miss row
+          val adds = if (entity == null) Array.empty[AsOfEvent] else evs.filter(_.tag == 0)
+          // the batch's adds merged into the sorted history; the sort is
+          // stable, so at equal t state rows come first and the latest add
+          // wins. Events sort by (t, tag), so the adds a probe may see are
+          // exactly those with t' <= t: one search over the merged times.
+          val merged = (prev ++ adds.map(e => (e.t, e.value))).sortBy(_._1)
+          val ts = merged.map(_._1)
+          val outRows = evs.filter(_.tag == 1).map { e =>
+            val at = AsOfJoin.lastAtOrBefore(ts, e.t)
+            if (at < 0) AsOfOut(entity, e.t, e.probe_id, null, null)
+            else AsOfOut(entity, e.t, e.probe_id, ts(at), merged(at)._2)
           }
-          if (addT.nonEmpty) {
-            // merge batch adds into the sorted history (adds sorted; state
-            // sorted; histories interleave when events arrive late)
-            val mt = (ts ++ addT).zip(vs ++ addV).sortBy(_._1)
-            val keep = mt.takeRight(maxHistory)
-            ts = keep.map(_._1); vs = keep.map(_._2)
-            state.update(AsOfHistory(ts, vs))
+          if (adds.nonEmpty) {
+            val keep = merged.takeRight(maxHistory)
+            state.update(AsOfHistory(keep.map(_._1), keep.map(_._2)))
           }
           outRows.iterator
       }

@@ -54,9 +54,10 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("bucket values needing partition-path escaping round-trip (ADVICE r3)") {
-    // ':' '/' '%' are escaped by Spark's partition writer; the stats
-    // read-back and readCommitted must build the SAME escaped dir names,
-    // or these buckets silently record rows=0 despite data landing.
+    // ':' '/' '%' are escaped by Spark's partition writer; the per-bucket
+    // stats must match the bucket values themselves, and readCommitted must
+    // build the SAME escaped dir names, or these buckets silently record
+    // rows=0 (or read back nothing) despite data landing.
     // '"' and '\' must also survive in the JSON manifest.
     val odd = Seq("a:b", "p/q", "100%", "a\"b", "c\\d")
     val d2 = odd.zipWithIndex.flatMap { case (b, i) =>
@@ -73,5 +74,20 @@ class CheckpointSpec extends SparkSpec {
       .toSet == odd.toSet, "every manifest parses as JSON and reads its bucket back")
     val r2 = Checkpoint.runPartitioned(d2, "bucket", odd, dir, "t")
     assert(r2.skipped.toSet == odd.toSet, "escaped buckets must be seen as committed on resume")
+  }
+
+  test("a bucket with no input rows commits zeros and no partition; null times are ignored") {
+    val d = Seq[(String, java.lang.Long, Long)](("n", 5L, 1L), ("n", null, 2L), ("n", 9L, 3L),
+      ("n", null, 4L), ("z", null, 5L)).toDF("bucket", "t", "v")
+    val dir = freshDir()
+    val r = Checkpoint.runPartitioned(d, "bucket", Seq("n", "empty", "z"), dir, "t")
+    assert(r.written.map(m => m.bucket -> (m.rows, m.tMin, m.tMax)).toMap == Map(
+      "n" -> (4L, 5L, 9L), "empty" -> (0L, 0L, 0L), "z" -> (1L, 0L, 0L)))
+    assert(Checkpoint.isCommitted(dir, "empty"))
+    assert(!Files.exists(Paths.get(s"$dir/bucket=empty")), "a zero-row bucket writes no partition")
+    assert(Files.exists(Paths.get(s"$dir/bucket=n")) && Files.exists(Paths.get(s"$dir/bucket=z")))
+    // a write with no rows at all still commits its pending buckets
+    val none = Checkpoint.runPartitioned(d, "bucket", Seq("gone"), freshDir(), "t")
+    assert(none.written.map(m => (m.bucket, m.rows, m.tMin, m.tMax)) == Seq(("gone", 0L, 0L, 0L)))
   }
 }

@@ -90,6 +90,7 @@ class IntervalBinRuleSpec extends SparkSpec {
       """SELECT p.probe_id, f.fid FROM probes_adv p JOIN feats_adv f
         |  ON p.entity = f.entity AND p.start < f.end AND p.end > f.start""".stripMargin
     val expected = spark.sql(sqlText).as[(Long, Long)].collect().toSet
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ IntervalBinRule
     try {
@@ -103,7 +104,7 @@ class IntervalBinRuleSpec extends SparkSpec {
           s"extra=${(got.toSet -- expected).take(5)}")
       assert(expected.nonEmpty)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
     }
@@ -123,6 +124,7 @@ class IntervalBinRuleSpec extends SparkSpec {
         |  ON p.entity = f.entity AND f.start >= p.start AND f.end <= p.end""".stripMargin
     val expContained = spark.sql(contained).as[(Long, Long)].collect().toSet
     val expContains = spark.sql(contains).as[(Long, Long)].collect().toSet
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ IntervalBinRule
     try {
@@ -141,7 +143,7 @@ class IntervalBinRuleSpec extends SparkSpec {
         assert(exp.nonEmpty)
       }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
     }
@@ -180,6 +182,7 @@ class IntervalBinRuleSpec extends SparkSpec {
       """SELECT p.probe_id, f.fid FROM probes_cadv p JOIN feats_cadv f
         |  ON p.entity = f.entity AND p.start >= f.start AND p.end <= f.end""".stripMargin
     val expected = spark.sql(sqlText).as[(Long, Long)].collect().toSet
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ IntervalBinRule
     try {
@@ -199,7 +202,7 @@ class IntervalBinRuleSpec extends SparkSpec {
           s"extra=${(got.toSet -- expected).take(5)}")
       assert(expected.nonEmpty)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
     }
@@ -209,6 +212,7 @@ class IntervalBinRuleSpec extends SparkSpec {
     val (a, b) = fixture()
     a.createOrReplaceTempView("probes_g")
     b.createOrReplaceTempView("feats_g")
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ IntervalBinRule
     try {
@@ -228,7 +232,7 @@ class IntervalBinRuleSpec extends SparkSpec {
         assert(!spark.sql(s).queryExecution.optimizedPlan.toString.contains("__graft_bin"),
           s"rule must NOT fire for:\n$s")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
     }
@@ -266,6 +270,12 @@ class IntervalBinRuleSpec extends SparkSpec {
     val (a, b) = fixture()
     a.createOrReplaceTempView("probes_r")
     b.createOrReplaceTempView("feats_r")
+    // computed before the rule is installed: Spark's own plan
+    val expected = a.as("p").join(b.as("f"),
+      $"p.entity" === $"f.entity" && $"p.start" < $"f.end" && $"p.end" > $"f.start" &&
+        $"p.probe_id" % 3 === $"f.fid" % 3)
+      .select($"p.probe_id", $"f.fid").as[(Long, Long)].collect().toSet
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ IntervalBinRule
     try {
@@ -282,13 +292,9 @@ class IntervalBinRuleSpec extends SparkSpec {
           |  ON p.entity = f.entity AND p.start < f.end AND p.end > f.start
           |     AND p.probe_id % 3 = f.fid % 3""".stripMargin)
       assert(extra.queryExecution.executedPlan.toString.contains("__graft_bin"))
-      val expected = a.as("p").join(b.as("f"),
-        $"p.entity" === $"f.entity" && $"p.start" < $"f.end" && $"p.end" > $"f.start" &&
-          $"p.probe_id" % 3 === $"f.fid" % 3)
-        .select($"p.probe_id", $"f.fid").as[(Long, Long)].collect().toSet
       assert(extra.as[(Long, Long)].collect().toSet == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
     }

@@ -52,17 +52,21 @@ class StreamingMultimodalSpec extends SparkSpec {
 
   test("streaming as-of (flatMapGroupsWithState) == batch as-of, across micro-batches") {
     import graft.ops.AsOfJoin
-    // a null-entity feature and probe: a null entity never matches
-    val feats = Seq(("u1", 10L, 1.0), ("u1", 20L, 2.0), ("u2", 5L, 5.0), (null, 3L, 9.0))
+    // a null-entity feature and probe: a null entity never matches; a
+    // null value (u4) carried across the batches stays null
+    val feats = Seq[(String, Long, java.lang.Double)](("u1", 10L, 1.0), ("u1", 20L, 2.0),
+      ("u2", 5L, 5.0), (null, 3L, 9.0), ("u4", 10L, null))
       .toDF("entity", "t", "value")
     val probes = Seq(("u1", 9L, 100L), ("u1", 10L, 101L), ("u1", 25L, 102L),
-      ("u2", 4L, 103L), ("u3", 7L, 104L), (null, 8L, 105L)).toDF("entity", "t", "probe_id")
+      ("u2", 4L, 103L), ("u3", 7L, 104L), (null, 8L, 105L), ("u4", 12L, 106L))
+      .toDF("entity", "t", "probe_id")
     val exp = AsOfJoin.windowed(probes, feats)
       .select("probe_id", "f_t", "value")
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getLong(1),
         if (r.isNullAt(2)) null else r.getDouble(2))).toSet
     assert(exp.contains((105L, null, null)), s"a null entity never matches: $exp")
+    assert(exp.contains((106L, 10L, null)), s"a null value stays null: $exp")
 
     val tagged = StreamingFeatures.taggedUnion(probes, feats)
     val dir = Files.createTempDirectory("asof_stream").toString
